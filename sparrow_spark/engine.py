@@ -19,11 +19,13 @@ Design decisions vs the reference:
 - Storage is columnar parquet per table (vectorized scans, partition
   parallelism) instead of cell-per-key KV (O(rows x cols) point gets,
   single partition — BASELINE.md).
-- UPDATE/DELETE are copy-on-write rewrites (filter/union/overwrite +
-  atomic-ish directory swap): the same "SELECT rowid then mutate" shape
-  as the reference (SURVEY §3.3), done set-at-a-time. Non-transactional,
-  like the reference (COMMIT is a no-op there:
-  src/core/execution.rs:1265-1267).
+- Every write is a file-level copy-on-write through one journaled
+  commit (_commit): the statement finds the files holding the rows it
+  changes, rewrites only those and swaps them in — the same "SELECT
+  rowid then mutate" shape as the reference (SURVEY §3.3), done
+  set-at-a-time. A killed write leaves the old or the new table; there
+  are no multi-statement transactions, like the reference (COMMIT is a
+  no-op there: src/core/execution.rs:1265-1267).
 - Every table carries a hidden `rowid` column (uuid at insert,
   reference src/physical_plan/insert.rs:33) stored in parquet but
   excluded from the logical schema.
@@ -31,6 +33,8 @@ Design decisions vs the reference:
 
 from __future__ import annotations
 
+import datetime
+import functools
 import itertools
 import json
 import os
@@ -42,6 +46,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from sparrow_spark.catalog import (
     MYSQL_TO_SPARK,
@@ -128,6 +133,67 @@ def _take_paren_block(s: str, what: str) -> tuple[str, str]:
     raise SparrowError(1064, f"unbalanced parens in {what}")
 
 
+def _key(row, cols) -> tuple:
+    """A row's values on `cols`, hashable (binary values as bytes)."""
+    return tuple(
+        bytes(v) if isinstance(v, bytearray) else v for v in (row[c] for c in cols)
+    )
+
+
+def _sql_lit(value, spark_type: str) -> str:
+    """A collected column value as a SQL literal of its type. A whole
+    IN-list or lookup map then parses as one expression, where F.lit
+    costs a py4j round trip per value (about 1 s per 1000)."""
+    if value is None:
+        return f"CAST(NULL AS {spark_type})"
+    if isinstance(value, datetime.datetime) and spark_type != "timestamp_ntz":
+        # PySpark collects a timestamp as a naive local time; its own
+        # converter maps it back to the stored instant.
+        return f"TIMESTAMP_MICROS({TimestampType().toInternal(value)})"
+    if isinstance(value, (bytes, bytearray)):
+        return f"X'{bytes(value).hex()}'"
+    text = str(value).replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{text}' AS {spark_type})"
+
+
+def _first_dup(rows, cols, skip_null: bool):
+    """The first key on `cols` repeated in `rows`, in batch order, or
+    None; skip_null exempts keys holding a NULL."""
+    seen = set()
+    for r in rows:
+        k = _key(r, cols)
+        if skip_null and None in k:
+            continue
+        if k in seen:
+            return k
+        seen.add(k)
+    return None
+
+
+def _dup_error(key: tuple, index_name: str) -> SparrowError:
+    shown = "-".join(str(v) for v in key)
+    return SparrowError(1062, f"Duplicate entry '{shown}' for key '{index_name}'")
+
+
+def _odku_plan(rows, stored, cols) -> tuple[list, list]:
+    """ODKU over a collected VALUES batch with one key set, planned as
+    MySQL runs it: (updates, inserts) as (rowid, index of the incoming
+    row), updates in the order they apply. An inserted row gets its
+    rowid here, so a later duplicate in the batch folds onto it. NULL
+    keys never collide."""
+    updates, inserts = [], []
+    owner = {_key(s, cols): s[ROWID] for s in stored}
+    for i, r in enumerate(rows):
+        k = _key(r, cols)
+        if None not in k and k in owner:
+            updates.append((owner[k], i))
+            continue
+        inserts.append((str(uuid.uuid4()), i))
+        if None not in k:
+            owner[k] = inserts[-1][0]
+    return updates, inserts
+
+
 class Session:
     """Per-connection session state over a shared Engine, mirroring the
     reference's per-client SessionContext (src/core/session_context.rs:6-44):
@@ -198,11 +264,21 @@ class Engine:
         # `dual` as a real 1-row relation (reference: 1-row MemTable,
         # src/datafusion_impl/catalog/information_schema.rs:117-133).
         spark.sql("SELECT 1 AS dummy").createOrReplaceTempView("dual")
-        # Re-register any tables persisted by a previous engine instance.
+        # Re-register any tables persisted by a previous engine instance,
+        # finishing a commit it was killed in (the lock runs _recover; a
+        # live holder that times the wait out finishes its own).
         for schema in self.catalog.schemas():
             self._spark_create_db(schema)
             for table in self.catalog.tables(schema):
                 self._register_spark_table(self.catalog.load(schema, table))
+                names = os.listdir(self.catalog.table_path(schema, table))
+                if any(n == self._JOURNAL or n.startswith(".staging-") for n in names):
+                    try:
+                        with self._write_lock(schema, table):
+                            pass
+                    except SparrowError as e:
+                        if e.code != 1205:
+                            raise
 
     def new_session(self) -> Session:
         """One per client connection (reference src/main.rs:88-99 spawns
@@ -627,16 +703,8 @@ class Engine:
         # Split column body from tail clauses (ENGINE=, PARTITIONED BY)
         # by paren depth — a greedy regex would swallow a parenthesized
         # tail clause into the body.
-        depth, i = 1, m.end()
-        while i < len(stmt) and depth:
-            if stmt[i] == "(":
-                depth += 1
-            elif stmt[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            raise SparrowError(1064, f"syntax error in CREATE TABLE: {stmt[:80]}")
-        body, tail = stmt[m.end() : i - 1], stmt[i:].strip()
+        body, tail = _take_paren_block(stmt[m.end() - 1 :], "CREATE TABLE")
+        tail = tail.strip()
         schema, table = self._resolve_table_name(name_raw)
         if not self.catalog.has_schema(schema):
             raise SparrowError(1049, f"Unknown database '{schema}'")
@@ -845,24 +913,23 @@ class Engine:
                 )
             # Parquet embeds column names per file, so a rename is a COW
             # rewrite with the column aliased — the same physical
-            # primitive as DROP COLUMN, keeping old files unreadable
-            # never: the rewrite replaces the data dir atomically.
-            data = self._read_physical(schema, table, tdef)
-            new_data = data.select(
+            # primitive as DROP COLUMN. The new definition commits with
+            # the files, so no reader pairs the old name with new files.
+            files = self._all_files(schema, table)
+            new_data = self._read_files(tdef, files).select(
                 ROWID,
                 *[
                     F.col(c.name).alias(new if c.name == old else c.name)
                     for c in tdef.columns
                 ],
             )
-            self._overwrite_data(schema, table, new_data)
             cdef.name = new
             tdef.primary_key = [new if c == old else c for c in tdef.primary_key]
             tdef.uniques = [
                 [new if c == old else c for c in u] for u in tdef.uniques
             ]
-            self.catalog.save(tdef)
-            self._recreate_spark_table(tdef)
+            self._commit(schema, table, files, new_data, new_tdef=tdef)
+            self._register_spark_table(tdef)
             return Result("ok")
         m = re.match(
             r"ALTER\s+TABLE\s+(\S+)\s+RENAME\s+(?:TO\s+|AS\s+)?(\S+)\s*$",
@@ -914,10 +981,11 @@ class Engine:
                 f"Column '{col}' has a partitioning function dependency "
                 "and cannot be dropped",
             )
-        data = self._read_physical(schema, table, tdef)
+        files = self._all_files(schema, table)
         remaining = [c for c in tdef.columns if c.name != col]
-        new_data = data.select(ROWID, *[F.col(c.name) for c in remaining])
-        self._overwrite_data(schema, table, new_data)
+        new_data = self._read_files(tdef, files).select(
+            ROWID, *[F.col(c.name) for c in remaining]
+        )
         tdef.columns = remaining
         for i, c in enumerate(tdef.columns):
             c.ordinal_position = i + 1
@@ -925,16 +993,30 @@ class Engine:
         tdef.uniques = [u for u in (
             [c for c in u if c != col] for u in tdef.uniques
         ) if u]
-        self.catalog.save(tdef)
-        self._recreate_spark_table(tdef)
+        self._commit(schema, table, files, new_data, new_tdef=tdef)
+        self._register_spark_table(tdef)
         return Result("ok")
 
     # ------------------------------------------------------------------
     # DML
     # ------------------------------------------------------------------
-    def _rows_from_select(self, name_raw: str, collist, query_sql: str):
-        """Shared SELECT-source evaluation for INSERT [IGNORE] / ODKU:
-        returns (schema, table, tdef, typed new_rows)."""
+    _SOURCE_RE = (
+        r"\s+INTO\s+([\w`.]+)\s*(?:\(([^)]*)\))?\s*"
+        r"(?:VALUES\s*(.+)|((?:SELECT|WITH|TABLE)\b.*))$"
+    )
+
+    def _insert_rows_any(self, stmt: str, verb: str = "INSERT"):
+        """Rows for <verb> INTO t [cols] (VALUES … | SELECT …), cast to
+        the table's columns, NULL for the unnamed ones: returns (schema,
+        table, tdef, new_rows, from_values). A literal VALUES list is
+        evaluated with Spark's expression library (the reference
+        evaluates each against an empty batch: src/execute_impl/
+        insert.rs:118-168 — same idea, set-at-a-time) into a local
+        relation, so collecting it starts no job."""
+        m = re.match(verb + self._SOURCE_RE, stmt, re.I | re.S)
+        if not m:
+            raise SparrowError(1064, f"syntax error in {verb}: {stmt[:80]}")
+        name_raw, collist, values_part, query_sql = m.groups()
         schema, table = self._resolve_table_name(name_raw)
         tdef = self.catalog.load(schema, table)
         target_cols = (
@@ -945,9 +1027,19 @@ class Engine:
         for c in target_cols:
             if not tdef.column(c):
                 raise SparrowError(1054, f"Unknown column '{c}' in 'field list'")
-        src = self._query(query_sql).df
-        if len(src.columns) != len(target_cols):
-            raise SparrowError(1136, "Column count doesn't match value count")
+        if values_part is not None:
+            values_sql = ",".join(split_top_level(values_part))
+            aliases = ",".join(f"c{i}" for i in range(len(target_cols)))
+            try:
+                src = self.spark.sql(
+                    f"SELECT * FROM (VALUES {values_sql}) AS v({aliases})"
+                )
+            except Exception as e:  # noqa: BLE001
+                raise SparrowError(1064, f"bad VALUES clause: {e}") from e
+        else:
+            src = self._query(query_sql).df
+            if len(src.columns) != len(target_cols):
+                raise SparrowError(1136, "Column count doesn't match value count")
         new_rows = src.select(
             *[
                 F.col(src.columns[i]).cast(tdef.column(c).spark_type).alias(c)
@@ -961,84 +1053,43 @@ class Engine:
                         1364, f"Field '{c.name}' doesn't have a default value"
                     )
                 new_rows = new_rows.withColumn(c.name, F.lit(None).cast(c.spark_type))
-        return schema, table, tdef, new_rows.select(*[c.name for c in tdef.columns])
-
-    def _insert_rows_any(self, insert_part: str):
-        """Rows for INSERT INTO t [cols] (VALUES … | SELECT …):
-        returns (schema, table, tdef, new_rows, from_values). Both
-        INSERT IGNORE and ON DUPLICATE KEY UPDATE accept either source
-        (MySQL does too); plain INSERT dispatches separately."""
-        m = re.match(
-            r"INSERT\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*VALUES\s*(.+)$",
-            insert_part,
-            re.I | re.S,
-        )
-        if m:
-            schema, table, tdef, new_rows, _ = self._rows_from_values(m)
-            return schema, table, tdef, new_rows, True
-        sm = re.match(
-            r"INSERT\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*"
-            r"((?:SELECT|WITH|TABLE)\b.*)$",
-            insert_part,
-            re.I | re.S,
-        )
-        if sm:
-            schema, table, tdef, new_rows = self._rows_from_select(
-                sm.group(1), sm.group(3), sm.group(4)
-            )
-            return schema, table, tdef, new_rows, False
-        raise SparrowError(1064, f"syntax error in INSERT: {insert_part[:80]}")
-
-    def _insert_select(self, m: "re.Match[str]") -> Result:
-        """INSERT INTO t [cols] SELECT … — superset of the reference's
-        VALUES-only surface, same unique-key enforcement and rowid
-        assignment as the VALUES path."""
-        name_raw, _, collist, query_sql = m.groups()
-        schema, table, tdef, new_rows = self._rows_from_select(
-            name_raw, collist, query_sql
-        )
-        self._check_unique(tdef, new_rows)
-        with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        n_rows = with_rowid.count()
-        self._partitioned_writer(tdef, with_rowid, "append").parquet(
-            self.catalog.data_path(schema, table)
-        )
-        self._sync_partitions(schema, table, tdef)
-        return Result("ok", affected_rows=n_rows)
+        new_rows = new_rows.select(*[c.name for c in tdef.columns])
+        return schema, table, tdef, new_rows, values_part is not None
 
     def _replace(self, stmt: str) -> Result:
         """REPLACE INTO (MySQL upsert): delete stored rows that collide
         with the new rows on the primary or any unique key, then insert.
-        Copy-on-write rewrite like UPDATE/DELETE (§3.3)."""
-        m = re.match(
-            r"REPLACE\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*VALUES\s*(.+)$",
-            stmt,
-            re.I | re.S,
+        One IN-list probe finds the files holding a colliding row; only
+        those are rewritten, minus that row, and the new rows land with
+        them (a row in any other file collides with nothing)."""
+        schema, table, tdef, new_rows, from_values = self._insert_rows_any(
+            stmt, "REPLACE"
         )
-        if not m:
+        if not from_values:
             raise SparrowError(1064, f"syntax error in REPLACE: {stmt[:80]}")
-        schema, table, tdef, new_rows, n_rows = self._rows_from_values(m)
         key_sets = tdef.key_sets()
         if not key_sets:
             raise SparrowError(
                 1062, "REPLACE requires a PRIMARY KEY or UNIQUE constraint"
             )
+        rows = new_rows.collect()
         # Intra-batch duplicates still error (matches INSERT semantics;
         # MySQL would keep the last row — stricter is safer here).
         for index_name, cols in key_sets:
-            dup = (
-                new_rows.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).collect()
+            dup = _first_dup(rows, cols, skip_null=False)
+            if dup is not None:
+                raise _dup_error(dup, index_name)
+        stored, pred = self._probe_keys(tdef, rows, key_sets)
+        touched = self._rel_files(schema, table, [r["__file"] for r in stored])
+        added = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
+        if touched:
+            # Plain equality, like an anti-join: NULL keys never collide.
+            kept = self._read_files(tdef, touched).filter(
+                ~F.coalesce(pred, F.lit(False))
             )
-            if dup:
-                key = "-".join(str(dup[0][c]) for c in cols)
-                raise SparrowError(1062, f"Duplicate entry '{key}' for key '{index_name}'")
-        existing = self._read_physical(schema, table, tdef)
-        keep = existing
-        for _, cols in key_sets:
-            keep = keep.join(new_rows.select(*cols), on=cols, how="left_anti")
-        with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        self._overwrite_data(schema, table, keep.unionByName(with_rowid))
-        return Result("ok", affected_rows=n_rows)
+            added = kept.unionByName(added)
+        self._commit(schema, table, touched, added)
+        return Result("ok", affected_rows=len(rows))
 
     def _insert_ignore(self, stmt: str) -> Result:
         """INSERT IGNORE (MySQL): rows that would raise duplicate-key
@@ -1094,26 +1145,19 @@ class Engine:
                 )
             new_rows = survivors.select(*col_names)
         with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        n_rows = with_rowid.count()
-        if n_rows:
-            self._partitioned_writer(tdef, with_rowid, "append").parquet(
-                self.catalog.data_path(schema, table)
-            )
-            self._sync_partitions(schema, table, tdef)
+        n_rows, _ = self._commit(schema, table, [], with_rowid)
         return Result("ok", affected_rows=n_rows)
 
     def _truncate(self, stmt: str) -> Result:
         """TRUNCATE [TABLE] t — MySQL's fast table reset. Same physical
-        action as the unconditional DELETE (swap in an empty dir) but
+        action as the unconditional DELETE (commit every file away) but
         with MySQL's contract: affected_rows reports 0, not the removed
         row count."""
         m = re.match(r"TRUNCATE\s+(?:TABLE\s+)?([\w`.]+)\s*$", stmt, re.I)
         if not m:
             raise SparrowError(1064, f"syntax error in TRUNCATE: {stmt[:80]}")
         schema, table = self._resolve_table_name(m.group(1))
-        tdef = self.catalog.load(schema, table)
-        data = self._read_physical(schema, table, tdef)
-        self._overwrite_data(schema, table, data.limit(0))
+        self._commit(schema, table, self._all_files(schema, table), None)
         return Result("ok", affected_rows=0)
 
     def _insert_odku(self, insert_part: str, assign_sql: str) -> Result:
@@ -1122,27 +1166,27 @@ class Engine:
         key apply the assignment list to the EXISTING row — `VALUES(c)`
         inside an assignment refers to the incoming row's value, bare
         column names to the stored row (MySQL semantics) — and
-        non-colliding rows insert normally. Copy-on-write set algebra,
-        no per-row loop: one anti-join splits insert-vs-update, one
-        inner join pairs stored rows with their incoming twin, the
-        assignments evaluate set-at-a-time. affected_rows follows the
-        MySQL convention: 1 per inserted row, 2 per updated row.
+        non-colliding rows insert normally; affected_rows is 1 per
+        inserted row, 2 per update. Only the files holding an updated
+        stored row are rewritten; with none, the rows append. A literal
+        VALUES batch over one key set is planned in Python
+        (_insert_odku_values); a SELECT source or several key sets run
+        the set algebra below.
 
         MySQL-semantics notes (also in README "Dialect compatibility"):
         NULLs never conflict in a unique index, so NULL-keyed incoming
-        rows fall through to plain insert (plain-equality joins
-        throughout — never eqNullSafe, which would pair NULL with NULL
-        and double-write the stored row). An incoming row that collides
-        with DIFFERENT stored rows on different indexes updates only
-        the row matched by the FIRST key set in index order (MySQL
-        updates one row per incoming row); the remaining collisions
-        suppress the insert but apply no second update. Intra-batch
-        duplicate keys fold sequentially like MySQL for the
-        well-defined case (_insert_odku_sequential: VALUES batch,
-        single key set, key columns not reassigned); SELECT sources /
-        multi-index / key-mutating duplicates still error 1062
-        (documented deviation — MySQL's own fold order is undefined or
-        discouraged there).
+        rows insert plainly. An incoming row that collides with
+        DIFFERENT stored rows on different indexes updates only the row
+        matched by the FIRST key set in index order (MySQL updates one
+        row per incoming row); the other collisions suppress the insert
+        but apply no second update. Intra-batch duplicate keys fold
+        sequentially like MySQL (the first occurrence inserts or
+        updates, each later one updates the accumulated row) for the
+        well-defined case: a VALUES batch, a single key set, key columns
+        not reassigned. SELECT sources (MySQL leaves their fold order
+        undefined), several unique indexes (MySQL's docs advise against
+        ODKU there) and key-mutating assignments (they cascade) still
+        error 1062.
 
         The reference only ERRORS on duplicates (error 1062,
         src/execute_impl/insert.rs:208); ODKU, REPLACE (_replace) and
@@ -1158,7 +1202,7 @@ class Engine:
                 "or UNIQUE constraint",
             )
         # Parse the assignment list; VALUES(c) -> the incoming row's c.
-        assigns: list[tuple[str, str]] = []
+        assigns: dict[str, str] = {}
         for part in split_top_level(assign_sql):
             am = re.match(r"\s*`?(\w+)`?\s*=\s*(.+)$", part, re.S)
             if not am:
@@ -1170,50 +1214,38 @@ class Engine:
                 r"VALUES\s*\(\s*`?(\w+)`?\s*\)", r"`__new_\1`", am.group(2),
                 flags=re.I,
             )
-            assigns.append((cname, expr_sql))
-        # Intra-batch duplicate keys: MySQL applies the UPDATE clause
-        # sequentially (first occurrence inserts-or-updates, each later
-        # one updates the accumulated row). That is implemented below
-        # for the well-defined case — a literal VALUES batch, a single
-        # key set, and assignments that don't rewrite key columns — by
-        # occurrence-rank passes (pass count = max multiplicity, each
-        # pass set-at-a-time). Outside that case (SELECT sources, whose
-        # fold order MySQL itself leaves undefined; multiple unique
-        # indexes, which MySQL's own docs say to avoid with ODKU; or
-        # key-mutating assignments, which cascade) it stays error 1062
-        # — documented in README "Dialect compatibility". Rows with a
-        # NULL in the key never conflict and are exempt throughout.
-        has_dups = False
+            assigns[cname] = expr_sql
+        rows = new_rows.collect() if from_values else None
         for index_name, cols in key_sets:
-            nn = new_rows
-            for c in cols:
-                nn = nn.filter(F.col(c).isNotNull())
             dup = (
-                nn.groupBy(*cols)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .collect()
+                _first_dup(rows, cols, skip_null=True)
+                if rows is not None
+                else self._batch_dup(new_rows.dropna(subset=cols), cols)
             )
-            if dup:
-                has_dups = True
-                assigned = {c for c, _ in assigns}
-                if (
-                    not from_values
-                    or len(key_sets) > 1
-                    or assigned & set(cols)
-                ):
-                    key = "-".join(str(dup[0][c]) for c in cols)
-                    raise SparrowError(
-                        1062, f"Duplicate entry '{key}' for key '{index_name}'"
-                    )
-        if has_dups:
-            return self._insert_odku_sequential(
-                schema, table, tdef, new_rows, key_sets[0][1], assigns
-            )
-
-        existing = self._read_physical(schema, table, tdef)
+            if dup is not None and (
+                rows is None or len(key_sets) > 1 or assigns.keys() & set(cols)
+            ):
+                raise _dup_error(dup, index_name)
         col_names = [c.name for c in tdef.columns]
+        if rows is not None and len(key_sets) == 1:
+            return self._insert_odku_values(schema, table, tdef, rows, key_sets[0][1], assigns)
+
+        # One semi-join per key set finds the files holding a colliding
+        # stored row, and the set algebra runs over them alone — a row in
+        # any other file collides with nothing.
+        full = self._read_physical(schema, table, tdef).withColumn(
+            "__file", F.input_file_name()
+        )
+        hits = [
+            full.join(new_rows.select(*cols), on=cols, how="left_semi").select("__file")
+            for _, cols in key_sets
+        ]
+        touched = self._rel_files(
+            schema,
+            table,
+            [r["__file"] for r in functools.reduce(DataFrame.union, hits).distinct().collect()],
+        )
+        existing = self._read_files(tdef, touched)
         incoming = new_rows.select(
             *[F.col(c).alias(f"__new_{c}") for c in col_names]
         )
@@ -1231,8 +1263,8 @@ class Engine:
             upd = pair.select(
                 ROWID,
                 *[
-                    F.expr(dict(assigns)[c]).cast(tdef.column(c).spark_type).alias(c)
-                    if c in dict(assigns)
+                    F.expr(assigns[c]).cast(tdef.column(c).spark_type).alias(c)
+                    if c in assigns
                     else F.col(c)
                     for c in col_names
                 ],
@@ -1254,101 +1286,93 @@ class Engine:
             )
         n_updated = updated.count()
         inserted = to_insert.select(F.expr("uuid()").alias(ROWID), *col_names)
-        n_inserted = inserted.count()
-        self._overwrite_data(
-            schema, table, untouched.unionByName(updated).unionByName(inserted)
+        n_added, n_removed = self._commit(
+            schema,
+            table,
+            touched,
+            untouched.unionByName(updated).unionByName(inserted),
         )
-        return Result("ok", affected_rows=n_inserted + 2 * n_updated)
+        # Each stored row of the touched files is written back once,
+        # updated or not; the staged rows beyond them are the inserts.
+        return Result(
+            "ok", affected_rows=n_added - n_removed + 2 * n_updated
+        )
 
-    def _insert_odku_sequential(
-        self,
-        schema: str,
-        table: str,
-        tdef,
-        new_rows: DataFrame,
-        key_cols: list[str],
-        assigns: list[tuple[str, str]],
+    def _insert_odku_values(
+        self, schema: str, table: str, tdef, rows: list, cols: list, assigns: dict
     ) -> Result:
-        """ODKU with intra-batch duplicate keys, MySQL's sequential
-        semantics: the first occurrence of a key inserts (or updates
-        the stored row), each later occurrence applies the assignment
-        list to the ACCUMULATED row. Folded in occurrence-rank passes:
-        pass i carries every key's i-th occurrence and runs as one
-        set-at-a-time pair-join + assignment against the state left by
-        pass i-1, so the loop count is the batch's max key
-        multiplicity, not its row count. The batch is a literal VALUES
-        list (the caller guarantees it), so collecting it for rank
-        assignment is statement-text-sized driver state; per-pass
-        localCheckpoint keeps the composed state's plan constant-sized.
-        affected_rows follows MySQL: 1 per insert + 2 per applied
-        update (a key hit K times counts 1 + 2*(K-1) when new, 2*K
-        when stored)."""
+        """ODKU over a literal VALUES batch: the probe finds the stored
+        rows it collides with, _odku_plan decides in Python, and one
+        write rewrites the files holding an updated row plus the inserted
+        rows, each round of updates a projection looking the incoming
+        values up by rowid."""
         col_names = [c.name for c in tdef.columns]
-        rows = new_rows.collect()  # VALUES order (LocalRelation)
-        passes: list[list] = []
-        null_key_rows = []
-        seen: dict[tuple, int] = {}
-        for r in rows:
-            key = tuple(r[c] for c in key_cols)
-            if any(v is None for v in key):
-                null_key_rows.append(r)  # NULLs never conflict: plain insert
-                continue
-            occ = seen.get(key, 0)
-            seen[key] = occ + 1
-            while len(passes) <= occ:
-                passes.append([])
-            passes[occ].append(r)
-        state = self._read_physical(schema, table, tdef)
-        total_ins, total_upd = 0, 0
-        for batch_rows in passes:
-            batch = self.spark.createDataFrame(batch_rows, new_rows.schema)
-            incoming = batch.select(
-                *[F.col(c).alias(f"__new_{c}") for c in col_names]
+        stored, _ = self._probe_keys(tdef, rows, [("", cols)])
+        updates, inserts = _odku_plan(rows, stored, cols)
+        updated = {rid for rid, _ in updates}
+        touched = self._rel_files(
+            schema, table, [s["__file"] for s in stored if s[ROWID] in updated]
+        )
+        state = self._read_files(tdef, touched)
+        if inserts:
+            # An inline VALUES table stays a local relation; a DataFrame
+            # built from Python rows would start Python workers.
+            tuples = ", ".join(
+                f"('{rid}', "
+                + ", ".join(_sql_lit(rows[i][c], tdef.column(c).spark_type) for c in col_names)
+                + ")"
+                for rid, i in inserts
             )
-            cond = [state[c] == incoming[f"__new_{c}"] for c in key_cols]
-            pair = state.join(incoming, on=cond, how="inner")
-            upd = pair.select(
+            names = ", ".join(f"`{c}`" for c in [ROWID, *col_names])
+            state = state.unionByName(
+                self.spark.sql(f"SELECT * FROM VALUES {tuples} AS v({names})")
+            )
+        # A row updated k times (a folded duplicate) takes k rounds.
+        rounds: list[dict] = []
+        for rid, i in updates:
+            k = sum(rid in r for r in rounds)
+            if k == len(rounds):
+                rounds.append({})
+            rounds[k][rid] = rows[i]
+        for r in rounds:
+            lookup = ", ".join(
+                f"'{rid}', named_struct("
+                + ", ".join(
+                    f"'__new_{c}', {_sql_lit(row[c], tdef.column(c).spark_type)}"
+                    for c in col_names
+                )
+                + ")"
+                for rid, row in r.items()
+            )
+            state = state.withColumn("__new", F.expr(f"map({lookup})[`{ROWID}`]")).select(
+                "*", "__new.*"
+            ).select(
                 ROWID,
                 *[
-                    F.expr(dict(assigns)[c])
-                    .cast(tdef.column(c).spark_type)
+                    F.when(
+                        F.col("__new").isNotNull(),
+                        F.expr(assigns[c]).cast(tdef.column(c).spark_type),
+                    )
+                    .otherwise(F.col(c))
                     .alias(c)
-                    if c in dict(assigns)
+                    if c in assigns
                     else F.col(c)
                     for c in col_names
                 ],
             )
-            unmatched = batch.join(
-                state.select(*key_cols), on=key_cols, how="left_anti"
-            )
-            ins = unmatched.select(F.expr("uuid()").alias(ROWID), *col_names)
-            n_upd, n_ins = upd.count(), ins.count()
-            total_upd += n_upd
-            total_ins += n_ins
-            state = (
-                state.join(pair.select(ROWID), on=ROWID, how="left_anti")
-                .unionByName(upd)
-                .unionByName(ins)
-                .localCheckpoint(eager=True)
-            )
-        if null_key_rows:
-            nk = self.spark.createDataFrame(null_key_rows, new_rows.schema)
-            state = state.unionByName(
-                nk.select(F.expr("uuid()").alias(ROWID), *col_names)
-            )
-            total_ins += len(null_key_rows)
-        self._overwrite_data(schema, table, state)
-        return Result("ok", affected_rows=total_ins + 2 * total_upd)
+        self._commit(schema, table, touched, state)
+        return Result("ok", affected_rows=len(inserts) + 2 * len(updates))
 
     def _merge(self, stmt: str) -> Result:
         """MERGE INTO target USING src ON cond
         [WHEN MATCHED THEN UPDATE SET c = expr, ... | DELETE]
         [WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs) | INSERT *]
 
-        Copy-on-write set algebra (no per-row loop): matched target rows
-        are rewritten (or dropped), unmatched source rows appended. The
-        reference has no MERGE; this is the engine's upsert superset
-        beyond REPLACE."""
+        Set algebra (no per-row loop): matched target rows are rewritten
+        (or dropped), unmatched source rows appended. Only the files
+        holding a matched target row are rewritten; with none, the new
+        rows append. The reference has no MERGE; this is the engine's
+        upsert superset beyond REPLACE."""
         head_m = re.match(
             r"MERGE\s+INTO\s+([\w`.]+)(?:\s+AS\s+(\w+)|\s+(\w+))?\s+USING\s+",
             stmt,
@@ -1361,20 +1385,12 @@ class Engine:
         # The USING source may be a parenthesized subquery with nested
         # parens (CAST(...), function calls) — match by depth, not regex.
         if rest.startswith("("):
-            depth, i = 0, 0
-            for i, ch in enumerate(rest):
-                depth += ch == "("
-                depth -= ch == ")"
-                if depth == 0:
-                    break
-            if depth != 0:
-                raise SparrowError(1064, "unbalanced parens in MERGE USING")
-            src_sql, rest = rest[: i + 1], rest[i + 1:]
+            src_query, rest = _take_paren_block(rest, "MERGE USING")
         else:
             sm = re.match(r"([\w`.]+)", rest)
             if not sm:
                 raise SparrowError(1064, f"syntax error in MERGE: {stmt[:80]}")
-            src_sql, rest = sm.group(1), rest[sm.end():]
+            src_query, rest = f"SELECT * FROM {sm.group(1)}", rest[sm.end():]
         tail_m = re.match(
             r"(?:\s+AS\s+(\w+)|\s+(?!ON\b)(\w+))?\s+ON\s+(.+?)\s+(WHEN\s+.+)$",
             rest,
@@ -1418,69 +1434,84 @@ class Engine:
         if not (upd_m or del_m or has_insert):
             raise SparrowError(1064, "MERGE needs at least one WHEN clause")
 
-        src = (
-            self._query(src_sql[1:-1]).df
-            if src_sql.startswith("(")
-            else self._query(f"SELECT * FROM {src_sql}").df
-        ).alias(s_alias)
-        target = self._read_physical(schema, table, tdef).alias(t_alias)
+        src = self._query(src_query).df.alias(s_alias)
+        full = self._read_physical(schema, table, tdef)
         cond = F.expr(substitute_variables(on_cond, self.system_vars, self.user_vars))
         tcols = [c.name for c in tdef.columns]
-
-        matched_t = target.join(src, cond, "left_semi")
-        unmatched_t = target.join(src, cond, "left_anti")
-        affected = 0
-
-        if del_m:
-            rewritten = unmatched_t
-            affected += matched_t.count()
-        elif upd_m:
-            assigns = {}
+        assigns = {}
+        if upd_m:
             for item in split_top_level(upd_m.group(1)):
                 col, expr = item.split("=", 1)
                 col = check_ident(col.strip().split(".")[-1])
                 if not tdef.column(col):
                     raise SparrowError(1054, f"Unknown column '{col}' in MERGE SET")
                 assigns[col] = expr.strip()
-            joined = target.join(src, cond, "inner")
-            updated = joined.select(
-                F.col(f"{t_alias}.{ROWID}").alias(ROWID),
-                *[
-                    (
-                        F.expr(assigns[c]).cast(tdef.column(c).spark_type)
-                        if c in assigns
-                        else F.col(f"{t_alias}.{c}")
-                    ).alias(c)
-                    for c in tcols
-                ],
+
+        affected, touched = 0, []
+        if upd_m or del_m:
+            # One bounded job counts the matched target rows, collects
+            # their files (input_file_name() taken at the scan, before
+            # the join) and checks cardinality: UPDATE would write a row
+            # matched by several source rows back several times, so it
+            # raises, like standard MERGE engines; DELETE drops it once.
+            stats = (
+                full.withColumn("__file", F.input_file_name())
+                .alias(t_alias)
+                .join(src, cond, "inner")
+                .groupBy(F.col(f"{t_alias}.{ROWID}"), F.col(f"{t_alias}.__file"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.max("n").alias("max_n"),
+                    F.collect_set("__file").alias("files"),
+                )
+                .collect()[0]
             )
-            # Cardinality check + affected count in ONE bounded job: a
-            # target row matched by several source rows would be written
-            # back as several copies (silent table growth) — standard
-            # MERGE engines raise instead.
-            stats = updated.groupBy(ROWID).agg(
-                F.count(F.lit(1)).alias("n")
-            ).agg(
-                F.count(F.lit(1)).alias("rows"), F.max("n").alias("max_n")
-            ).collect()[0]
-            if (stats.max_n or 0) > 1:
+            if upd_m and (stats.max_n or 0) > 1:
                 raise SparrowError(
                     1062,
                     "MERGE: a target row matched multiple source rows "
                     "(non-deterministic UPDATE)",
                 )
-            affected += stats.rows
-            rewritten = unmatched_t.unionByName(updated)
-        else:
-            rewritten = target
+            affected = stats.rows
+            touched = self._rel_files(schema, table, stats.files)
 
+        # Only the touched files are rewritten: every matched target row
+        # is in them, so the joins (the insert-side anti-join too) give
+        # the same answer against them as against the whole table.
+        target = self._read_files(tdef, touched).alias(t_alias)
+        parts = []
+        if touched and del_m:
+            parts.append(target.join(src, cond, "left_anti"))
+        elif touched:
+            # One outer join, not an anti-join plus an inner join: the
+            # cardinality check leaves each target row one match at most.
+            hit = src.withColumn("__hit", F.lit(True)).alias(s_alias)
+            parts.append(
+                target.join(hit, cond, "left_outer").select(
+                    F.col(f"{t_alias}.{ROWID}").alias(ROWID),
+                    *[
+                        F.when(
+                            F.col("__hit"), F.expr(assigns[c]).cast(tdef.column(c).spark_type)
+                        )
+                        .otherwise(F.col(f"{t_alias}.{c}"))
+                        .alias(c)
+                        if c in assigns
+                        else F.col(f"{t_alias}.{c}")
+                        for c in tcols
+                    ],
+                )
+            )
         if has_insert:
             if ins_spec is not None:
                 ins_cols = [check_ident(c) for c in split_top_level(ins_spec[0])]
                 ins_exprs = split_top_level(ins_spec[1])
             else:  # INSERT *
                 ins_cols, ins_exprs = tcols, [f"{s_alias}.{c}" for c in tcols]
-            new_src = src.join(target, cond, "left_anti")
+            # Without a WHEN MATCHED clause no files were looked up, so
+            # the anti-join runs against the whole table.
+            against = target if (upd_m or del_m) else full.alias(t_alias)
+            new_src = src.join(against, cond, "left_anti")
             sel = []
             for c in tcols:
                 if c in ins_cols:
@@ -1490,14 +1521,18 @@ class Engine:
                     raise SparrowError(1364, f"Field '{c}' doesn't have a default value")
                 else:
                     sel.append(F.lit(None).cast(tdef.column(c).spark_type).alias(c))
-            inserted = new_src.select(*sel).select(
-                F.expr("uuid()").alias(ROWID), "*"
+            parts.append(
+                new_src.select(*sel).select(F.expr("uuid()").alias(ROWID), "*")
             )
-            affected += inserted.count()
-            rewritten = rewritten.select(ROWID, *tcols).unionByName(inserted)
 
-        self._overwrite_data(schema, table, rewritten.select(ROWID, *tcols))
-        return Result("ok", affected_rows=affected)
+        written = [p.select(ROWID, *tcols) for p in parts]
+        added = functools.reduce(DataFrame.unionByName, written) if written else None
+        n_added, n_removed = self._commit(schema, table, touched, added)
+        # The touched files' rows are written back, all of them for
+        # UPDATE and the unmatched ones for DELETE; the staged rows beyond
+        # those are the inserts.
+        kept = n_removed - (affected if del_m else 0)
+        return Result("ok", affected_rows=affected + n_added - kept)
 
     def _insert(self, stmt: str) -> Result:
         ign = re.match(r"INSERT\s+IGNORE\s+(INTO\s+.+)$", stmt, re.I | re.S)
@@ -1512,101 +1547,87 @@ class Engine:
         )
         if odku:
             return self._insert_odku(odku.group(1), odku.group(2))
-        sel = re.match(
-            r"INSERT\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*"
-            r"((?:SELECT|WITH|TABLE)\b.*)$",
-            stmt,
-            re.I | re.S,
-        )
-        if sel:
-            return self._insert_select(sel)
-        m = re.match(
-            r"INSERT\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*VALUES\s*(.+)$",
-            stmt,
-            re.I | re.S,
-        )
-        if not m:
-            raise SparrowError(1064, f"syntax error in INSERT: {stmt[:80]}")
-        schema, table, tdef, new_rows, n_rows = self._rows_from_values(m)
-        self._check_unique(tdef, new_rows)
+        schema, table, tdef, new_rows, from_values = self._insert_rows_any(stmt)
+        self._check_unique(tdef, new_rows, from_values)
         # assign rowids (reference: uuid per row, src/physical_plan/insert.rs:33)
         with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        self._partitioned_writer(tdef, with_rowid, "append").parquet(
-            self.catalog.data_path(schema, table)
-        )
-        self._sync_partitions(schema, table, tdef)
+        n_rows, _ = self._commit(schema, table, [], with_rowid)
         return Result("ok", affected_rows=n_rows)
 
-    def _rows_from_values(self, m: "re.Match[str]"):
-        """Shared VALUES evaluation for INSERT/REPLACE: returns
-        (schema, table, tdef, typed new_rows, n_rows)."""
-        name_raw, _, collist, values_part = m.groups()
-        schema, table = self._resolve_table_name(name_raw)
-        tdef = self.catalog.load(schema, table)
-        target_cols = (
-            [check_ident(c) for c in split_top_level(collist)]
-            if collist
-            else [c.name for c in tdef.columns]
-        )
-        for c in target_cols:
-            if not tdef.column(c):
-                raise SparrowError(1054, f"Unknown column '{c}' in 'field list'")
-
-        tuples = split_top_level(values_part)
-        n_rows = len(tuples)
-        # Evaluate VALUES expressions with the full Spark expression
-        # library (the reference evaluates each against an empty batch:
-        # src/execute_impl/insert.rs:118-168 — same idea, set-at-a-time).
-        values_sql = ",".join(tuples)
-        aliases = ",".join(f"c{i}" for i in range(len(target_cols)))
-        try:
-            raw = self.spark.sql(f"SELECT * FROM (VALUES {values_sql}) AS v({aliases})")
-        except Exception as e:  # noqa: BLE001
-            raise SparrowError(1064, f"bad VALUES clause: {e}") from e
-        exprs = []
-        for i, cname in enumerate(target_cols):
-            cdef = tdef.column(cname)
-            exprs.append(F.col(f"c{i}").cast(cdef.spark_type).alias(cname))
-        new_rows = raw.select(*exprs)
-        # columns not in the target list are NULL
-        for c in tdef.columns:
-            if c.name not in target_cols:
-                if not c.nullable:
-                    raise SparrowError(
-                        1364, f"Field '{c.name}' doesn't have a default value"
-                    )
-                new_rows = new_rows.withColumn(c.name, F.lit(None).cast(c.spark_type))
-        new_rows = new_rows.select(*[c.name for c in tdef.columns])
-        return schema, table, tdef, new_rows, n_rows
-
-    def _check_unique(self, tdef: TableDef, new_rows: DataFrame) -> None:
+    def _check_unique(
+        self, tdef: TableDef, new_rows: DataFrame, from_values: bool
+    ) -> None:
         """Duplicate-key probe before insert — the reference probes its
-        index keys per row (src/execute_impl/insert.rs:195-221); the
-        set-based equivalent is an intra-batch group count plus a
+        index keys per row (src/execute_impl/insert.rs:195-221). A
+        literal VALUES batch is statement-sized and a local relation, so
+        it is collected (no Spark job), checked for in-batch duplicates
+        in Python, and its keys probed in one IN-list scan. A SELECT
+        source stays set-at-a-time: an in-batch group count plus a
         semi-join against the stored table."""
         key_sets = tdef.key_sets()
         if not key_sets:
             return
+        if from_values:
+            rows, stored = new_rows.collect(), None
+            for index_name, cols in key_sets:
+                dup = _first_dup(rows, cols, skip_null=False)
+                if dup is None:
+                    if stored is None:
+                        stored, _ = self._probe_keys(tdef, rows, key_sets)
+                    # Stored keys are unique and the batch's too, so a
+                    # repeat here is a batch row hitting a stored one.
+                    dup = _first_dup(stored + rows, cols, skip_null=True)
+                if dup is not None:
+                    raise _dup_error(dup, index_name)
+            return
         existing = self._read_physical(tdef.schema, tdef.name, tdef)
         for index_name, cols in key_sets:
-            batch_dup = (
-                new_rows.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).collect()
-            )
-            if batch_dup:
-                key = "-".join(str(batch_dup[0][c]) for c in cols)
-                raise SparrowError(
-                    1062, f"Duplicate entry '{key}' for key '{index_name}'"
-                )
+            dup = self._batch_dup(new_rows, cols)
+            if dup is not None:
+                raise _dup_error(dup, index_name)
             clash = (
                 new_rows.join(existing.select(*cols), on=cols, how="left_semi")
                 .limit(1)
                 .collect()
             )
             if clash:
-                key = "-".join(str(clash[0][c]) for c in cols)
-                raise SparrowError(
-                    1062, f"Duplicate entry '{key}' for key '{index_name}'"
-                )
+                raise _dup_error(_key(clash[0], cols), index_name)
+
+    @staticmethod
+    def _batch_dup(new_rows: DataFrame, cols: list[str]) -> tuple | None:
+        """A key on `cols` that rows of a SELECT source repeat, or None."""
+        hit = new_rows.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).collect()
+        return _key(hit[0], cols) if hit else None
+
+    def _probe_keys(self, tdef: TableDef, rows: list, key_sets):
+        """The stored rows equal to a row of a literal batch on some key
+        set (plain equality: NULLs never conflict in a unique index), in
+        one shuffle-free, statement-sized scan. Returns (rows of __file,
+        rowid and the key columns; the predicate, None when no batch key
+        is NULL-free). The predicate is IN-lists, which parquet pushes
+        down: row groups whose min/max cannot hold a key are skipped."""
+        preds = []
+        for _, cols in key_sets:
+            keys = {k for k in (_key(r, cols) for r in rows) if None not in k}
+            if not keys:
+                continue
+            lits = [[_sql_lit(v, tdef.column(c).spark_type) for c, v in zip(cols, k)] for k in keys]
+            # The per-column IN-lists prune; for a composite key the
+            # tuple IN-list is the exact test.
+            conj = [
+                f"`{c}` IN ({', '.join(sorted({t[i] for t in lits}))})"
+                for i, c in enumerate(cols)
+            ]
+            if len(cols) > 1:
+                tuples = ", ".join(f"({', '.join(t)})" for t in lits)
+                conj.append(f"({', '.join(f'`{c}`' for c in cols)}) IN ({tuples})")
+            preds.append("(" + " AND ".join(conj) + ")")
+        if not preds:
+            return [], None
+        pred = F.expr(" OR ".join(preds))
+        cols = list(dict.fromkeys(c for _, kc in key_sets for c in kc))
+        data = self._read_physical(tdef.schema, tdef.name, tdef).filter(pred)
+        return data.select(F.input_file_name().alias("__file"), ROWID, *cols).collect(), pred
 
     def _update(self, stmt: str) -> Result:
         m = re.match(
@@ -1644,7 +1665,7 @@ class Engine:
                 col,
                 F.when(pred, F.expr(expr).cast(cdef.spark_type)).otherwise(F.col(col)),
             )
-        self._replace_files(schema, table, touched, updated)
+        self._commit(schema, table, touched, updated)
         return Result("ok", affected_rows=affected)
 
     def _delete(self, stmt: str) -> Result:
@@ -1655,10 +1676,8 @@ class Engine:
         schema, table = self._resolve_table_name(name_raw)
         tdef = self.catalog.load(schema, table)
         if not where:
-            # Unconditional DELETE = truncate: swap in an empty dir.
-            data = self._read_physical(schema, table, tdef)
-            total = data.count()
-            self._overwrite_data(schema, table, data.limit(0))
+            # Unconditional DELETE = truncate; the footers give the count.
+            _, total = self._commit(schema, table, self._all_files(schema, table), None)
             return Result("ok", affected_rows=total)
         pred = F.expr(substitute_variables(where, self.system_vars, self.user_vars))
         # File-level copy-on-write, like UPDATE: rewrite only the files
@@ -1669,7 +1688,7 @@ class Engine:
             return Result("ok", affected_rows=0)
         sub = self._read_files(tdef, touched)
         keep = sub.filter(~pred | pred.isNull())
-        self._replace_files(schema, table, touched, keep)
+        self._commit(schema, table, touched, keep)
         return Result("ok", affected_rows=affected)
 
     # ------------------------------------------------------------------
@@ -1677,17 +1696,17 @@ class Engine:
     # ------------------------------------------------------------------
     # Two Engine instances (or two processes) sharing one warehouse
     # directory must not interleave read-modify-write statements on the
-    # same table: UPDATE/DELETE read the matched file list and then
-    # swap files, so an unserialized concurrent writer could delete a
+    # same table: a write reads the matched file list and then commits
+    # a file swap, so an unserialized concurrent writer could delete a
     # file between those steps (lost update / dangling read). An
     # exclusive per-table ADVISORY lock file (O_CREAT|O_EXCL — atomic
     # on POSIX and on HDFS/S3-with-conditional-put equivalents)
-    # serializes whole statements; readers never take it (COW file
-    # swaps keep scans consistent enough for the reference's
-    # non-transactional contract). Within the serialized order the
-    # semantics are last-writer-wins, exactly like the reference's KV
-    # store under its global mutex (src/meta/meta_def.rs guards
-    # metadata, not data, the same trade). A lock whose holder process
+    # serializes whole statements, and its holder first rolls forward
+    # any commit a killed writer left (_recover); readers never take
+    # it. Within the serialized order the semantics are
+    # last-writer-wins, exactly like the reference's KV store under its
+    # global mutex (src/meta/meta_def.rs guards metadata, not data, the
+    # same trade). A lock whose holder process
     # is dead, or older than _LOCK_STALE_S, is broken — crash
     # recovery without an external coordinator.
     _LOCK_TIMEOUT_S = 10.0
@@ -1697,12 +1716,12 @@ class Engine:
     # real holder from an unrelated process that recycled its pid (or
     # a same-numbered pid on another host sharing the warehouse), and
     # without an age backstop that collision wedges the table forever.
-    # Age = time since the last HEARTBEAT (r16): the holder refreshes
-    # its lock's mtime every _LOCK_HEARTBEAT_S while the statement
-    # runs, so a legitimate operation of ANY duration never trips the
-    # ceiling (the r15 ADVICE gap: a >1h OPTIMIZE used to lose its
-    # lock mid-write at the ceiling) — only a holder that stopped
-    # heartbeating (crashed, frozen, or pre-heartbeat) ages past it.
+    # Age = time since the last HEARTBEAT: the holder refreshes its
+    # lock's mtime every _LOCK_HEARTBEAT_S while the statement runs, so
+    # a legitimate operation of ANY duration (a >1h OPTIMIZE) never
+    # trips the ceiling and loses its lock mid-write — only a holder
+    # that stopped heartbeating (crashed, frozen, or pre-heartbeat)
+    # ages past it.
     _LOCK_HARD_STALE_S = 3600.0
     _LOCK_HEARTBEAT_S = 20.0
 
@@ -1735,16 +1754,8 @@ class Engine:
         while True:
             try:
                 fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(
-                    fd,
-                    json.dumps(
-                        {
-                            "pid": os.getpid(),
-                            "eid": self._engine_id,
-                            "ts": time.time(),
-                        }
-                    ).encode(),
-                )
+                holder = {"pid": os.getpid(), "eid": self._engine_id, "ts": time.time()}
+                os.write(fd, json.dumps(holder).encode())
                 os.close(fd)
                 break
             except FileExistsError:
@@ -1765,22 +1776,14 @@ class Engine:
                             alive = True  # exists, owned by another user
                     age = time.time() - st.st_mtime
                     stale = age > self._LOCK_STALE_S
-                    # Liveness is authoritative for local holders: a
-                    # lock recording a live local pid is not broken at
-                    # _LOCK_STALE_S — OPTIMIZE/whole-table compactions
-                    # legitimately exceed it and locks are not
-                    # refreshed mid-operation, so an age-only break
-                    # would re-admit exactly the lost write the lock
-                    # prevents (the waiter raises 1205 instead). The
-                    # ordinary stale window breaks only locks whose
-                    # holder cannot be probed (no parseable pid — e.g.
-                    # a crashed writer from another host in a shared
-                    # warehouse); a confirmed-dead local pid breaks
-                    # immediately. _LOCK_HARD_STALE_S breaks REGARDLESS
-                    # of liveness: a probed-alive pid may be an
-                    # unrelated process that recycled the dead
-                    # holder's pid, and without the hard ceiling that
-                    # collision wedges the table forever.
+                    # Liveness is authoritative for local holders: an
+                    # age-only break of a live writer would re-admit the
+                    # lost write the lock prevents (the waiter raises
+                    # 1205 instead). A confirmed-dead pid breaks at once,
+                    # an unprobeable holder (no parseable pid, e.g. a
+                    # crashed writer on another host) after
+                    # _LOCK_STALE_S, any holder after _LOCK_HARD_STALE_S
+                    # without a heartbeat (pid recycling, see above).
                     dead_or_unprobeable = (
                         (not alive) if isinstance(pid, int) else stale
                     )
@@ -1827,6 +1830,9 @@ class Engine:
         )
         hb.start()
         try:
+            # A write killed mid-commit is finished before this one starts.
+            if self._recover(schema, table):
+                self._register_spark_table(self.catalog.load(schema, table))
             yield
         finally:
             stop_hb.set()
@@ -1834,11 +1840,11 @@ class Engine:
             self._release_own_lock(lock_path)
 
     def _break_lock(self, lock_path: str, observed) -> bool:
-        """Break a probed-breakable lock WITHOUT the probe->remove race
-        (r15 ADVICE): between a slow waiter's probe and its remove,
-        another waiter can break the same lock and a NEW holder can
-        re-create it — an unconditional remove then deletes the new
-        holder's LIVE lock and admits two writers. Instead the lock is
+        """Break a probed-breakable lock WITHOUT the probe->remove race:
+        between a slow waiter's probe and its remove, another waiter
+        can break the same lock and a NEW holder can re-create it — an
+        unconditional remove then deletes the new holder's LIVE lock
+        and admits two writers. Instead the lock is
         atomically RENAMED aside (only one waiter can win the rename)
         and the renamed file's identity is compared against the stat
         the probe decided on: same (inode, mtime) -> it really was the
@@ -1896,10 +1902,9 @@ class Engine:
         """Refresh our lock's mtime every _LOCK_HEARTBEAT_S while the
         statement runs, so the staleness windows measure time since
         the holder was last ALIVE, not statement duration — the hard
-        ceiling then only ever breaks genuinely abandoned locks (r15
-        ADVICE). Refreshes only while the file still records OUR
-        engine id: never extends a successor's lock after ours was
-        broken."""
+        ceiling then only ever breaks genuinely abandoned locks.
+        Refreshes only while the file still records OUR engine id:
+        never extends a successor's lock after ours was broken."""
         while not stop.wait(self._LOCK_HEARTBEAT_S):
             try:
                 with open(lock_path) as f:
@@ -1910,10 +1915,10 @@ class Engine:
                 return
 
     def _release_own_lock(self, lock_path: str) -> None:
-        """Remove the lock only if it is still OURS (r15 ADVICE: an
-        unconditional remove-by-path deletes a successor's live lock
-        whenever ours was broken mid-statement — the release-side twin
-        of the probe->remove race)."""
+        """Remove the lock only if it is still OURS (an unconditional
+        remove-by-path deletes a successor's live lock whenever ours
+        was broken mid-statement — the release-side twin of the
+        probe->remove race)."""
         try:
             with open(lock_path) as f:
                 if json.load(f).get("eid") != self._engine_id:
@@ -1927,13 +1932,17 @@ class Engine:
     # ------------------------------------------------------------------
     # physical helpers
     # ------------------------------------------------------------------
+    @staticmethod
+    def _physical_schema(tdef: TableDef) -> str:
+        """DDL of the stored columns: the hidden rowid, then the table's."""
+        return ", ".join(
+            [f"`{ROWID}` string"] + [f"`{c.name}` {c.spark_type}" for c in tdef.columns]
+        )
+
     def _read_physical(self, schema: str, table: str, tdef: TableDef) -> DataFrame:
         """Table data including the hidden rowid column."""
         path = self.catalog.data_path(schema, table)
-        fields = [f"`{ROWID}` string"] + [
-            f"`{c.name}` {c.spark_type}" for c in tdef.columns
-        ]
-        reader_schema = ", ".join(fields)
+        reader_schema = self._physical_schema(tdef)
         try:
             return self.spark.read.schema(reader_schema).parquet(path)
         except Exception:
@@ -2106,36 +2115,20 @@ class Engine:
                 "MIN FILES n must be trailing clauses",
             )
         rows = []
-        # Per-table write lock (r14 carried-lock-class sweep): OPTIMIZE
-        # rewrites the data dir via the same COW swap as UPDATE/DELETE,
-        # so an unlocked compaction could interleave with a concurrent
-        # DML's _replace_files and lose its writes. _locked_dml can't
-        # cover the multi-target form, so each target locks here; the
-        # lock file lives in table_path (never moved by the data-dir
-        # swap), so release always finds it.
+        # Per-table write lock: OPTIMIZE rewrites every file through the
+        # same commit as DML, so an unlocked compaction could interleave
+        # with a concurrent statement's commit and lose its writes.
+        # _locked_dml can't cover the multi-target form, so each target
+        # locks here.
         for schema, table in self._maintenance_targets(stmt, "OPTIMIZE"):
             with self._write_lock(schema, table):
                 tdef = self.catalog.load(schema, table)
-                if min_files > 1:
-                    data_dir = self.catalog.data_path(schema, table)
-                    n_files = 0
-                    if os.path.isdir(data_dir):
-                        for _root, _dirs, fns in os.walk(data_dir):
-                            n_files += sum(
-                                1 for fn in fns if fn.endswith(".parquet")
-                            )
-                    if n_files < min_files:
-                        rows.append(
-                            (
-                                f"{schema}.{table}",
-                                "optimize",
-                                "note",
-                                f"skipped: {n_files} file(s) < MIN FILES "
-                                f"{min_files}",
-                            )
-                        )
-                        continue
-                data = self._read_physical(schema, table, tdef).coalesce(1)
+                files = self._all_files(schema, table)
+                if min_files > 1 and len(files) < min_files:
+                    note = f"skipped: {len(files)} file(s) < MIN FILES {min_files}"
+                    rows.append((f"{schema}.{table}", "optimize", "note", note))
+                    continue
+                data = self._read_files(tdef, files).coalesce(1)
                 if zcols:
                     data = self._zorder_sort(tdef, data, zcols)
                 elif tdef.primary_key:
@@ -2143,7 +2136,7 @@ class Engine:
                     # row-group min/max stats then prune point/range
                     # predicates.
                     data = data.sortWithinPartitions(*tdef.primary_key)
-                self._overwrite_data(schema, table, data)
+                self._commit(schema, table, files, data)
                 rows.append((f"{schema}.{table}", "optimize", "status", "OK"))
         df = self.spark.createDataFrame(
             rows, schema=["Table", "Op", "Msg_type", "Msg_text"]
@@ -2165,39 +2158,22 @@ class Engine:
         )
         return Result("resultset", df)
 
-    def _partitioned_writer(self, tdef, df, mode: str):
-        """Writer with the table's hive partition layout applied.
-        Partition-column values become <col>=<val>/ directories, so a
-        predicate on them prunes at directory level for BOTH the
-        engine's own DML file discovery (_matched_files) and any scan."""
-        w = df.write.mode(mode)
-        if tdef.partition_by:
-            w = w.partitionBy(*tdef.partition_by)
-        return w
-
     def _sync_partitions(self, schema: str, table: str, tdef=None) -> None:
-        """Refresh the Spark-catalog registration after a write. For
-        partitioned tables the session catalog tracks partitions
-        explicitly (REFRESH alone does not discover new directories —
-        verified against the in-memory catalog), so recover them; at
-        warehouse scale a metastore with partition management amortizes
-        this to a per-partition upsert."""
+        """Refresh the Spark-catalog registration after a commit. The
+        session catalog tracks partitions explicitly (REFRESH alone does
+        not discover new directories), so recover them; at warehouse
+        scale a metastore amortizes this to a per-partition upsert."""
         self.spark.sql(f"REFRESH TABLE `{schema}`.`{table}`")
         tdef = tdef or self.catalog.load(schema, table)
         if tdef.partition_by:
             self.spark.sql(f"MSCK REPAIR TABLE `{schema}`.`{table}`")
-        if tdef.engine == "snapshot":
-            # Every write path funnels through here; committing after
-            # the physical write makes the manifest the durable record
-            # of the new file set (no-op when the set is unchanged).
-            self._snapshot_commit(schema, table, tdef)
 
     def _matched_files(self, schema, table, tdef, pred) -> tuple[int, list[str]]:
         """One pass over the table: per-parquet-file matched-row counts
-        via input_file_name(). Returns (total matched rows, list of
-        file URIs that must be rewritten). On a partitioned table a
-        partition predicate prunes this discovery scan to matching
-        directories (PartitionFilters — asserted in
+        via input_file_name(). Returns (total matched rows, data-dir-
+        relative paths of the files that must be rewritten). On a
+        partitioned table a partition predicate prunes this discovery
+        scan to matching directories (PartitionFilters — asserted in
         tests/test_engine_sql.py::test_partitioned_table_pruned_cow)."""
         data = self._read_physical(schema, table, tdef)
         per_file = (
@@ -2207,79 +2183,178 @@ class Engine:
             .count()
             .collect()
         )
-        return sum(r["count"] for r in per_file), [r["__file"] for r in per_file]
+        return sum(r["count"] for r in per_file), self._rel_files(
+            schema, table, [r["__file"] for r in per_file]
+        )
 
-    def _read_files(self, tdef: TableDef, files: list[str]) -> DataFrame:
-        fields = [f"`{ROWID}` string"] + [
-            f"`{c.name}` {c.spark_type}" for c in tdef.columns
-        ]
-        reader = self.spark.read.schema(", ".join(fields))
+    def _rel_files(self, schema: str, table: str, uris) -> list[str]:
+        """input_file_name() URIs -> sorted data-dir-relative paths."""
+        from urllib.parse import unquote, urlparse
+
+        data_dir = self.catalog.data_path(schema, table)
+        return sorted(
+            {os.path.relpath(unquote(urlparse(u).path), data_dir) for u in uris}
+        )
+
+    @staticmethod
+    def _parquet_files(root: str) -> list[str]:
+        """Sorted root-relative paths of the parquet files under root."""
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _dirs, fns in os.walk(root)
+            for f in fns
+            if f.endswith(".parquet")
+        )
+
+    def _all_files(self, schema: str, table: str) -> list[str]:
+        return self._parquet_files(self.catalog.data_path(schema, table))
+
+    def _read_files(
+        self, tdef: TableDef, files: list[str], base: str | None = None
+    ) -> DataFrame:
+        """Read the given parquet files (relative to `base`, the data dir
+        by default) with the table's schema, hidden rowid included."""
+        if not files:  # an empty local relation: joins with it fold away
+            return self.spark.createDataFrame([], self._physical_schema(tdef)).limit(0)
+        base = base or self.catalog.data_path(tdef.schema, tdef.name)
+        reader = self.spark.read.schema(self._physical_schema(tdef))
         if tdef.partition_by:
             # Reading leaf files directly skips partition discovery —
             # without basePath the <col>=<val>/ values would come back
             # NULL (and a COW rewrite would relocate every row to the
             # default partition).
-            reader = reader.option(
-                "basePath", self.catalog.data_path(tdef.schema, tdef.name)
-            )
-        return reader.parquet(*files)
+            reader = reader.option("basePath", base)
+        return reader.parquet(*[os.path.join(base, f) for f in files])
 
-    def _replace_files(
-        self, schema: str, table: str, old_files: list[str], new_data: DataFrame
-    ) -> None:
-        """File-level copy-on-write: stage the rewritten rows, move the
-        staged part files into the data dir (part file names carry a
-        fresh UUID — no collisions), then drop the superseded files.
-        Same non-transactional guarantees as _overwrite_data."""
-        from urllib.parse import unquote, urlparse
+    # ------------------------------------------------------------------
+    # the commit: one crash-safe copy-on-write primitive for every write
+    # ------------------------------------------------------------------
+    _JOURNAL = ".commit.json"
 
-        data_dir = self.catalog.data_path(schema, table)
+    def _commit(
+        self,
+        schema: str,
+        table: str,
+        removed: list[str],
+        added: DataFrame | None,
+        new_tdef: TableDef | None = None,
+    ) -> tuple[int, int]:
+        """The one write path: replace the `removed` files (data-dir-
+        relative; none for an append, every file for a whole-table
+        statement) by the rows of `added`, and commit `new_tdef` (ALTER)
+        with them. Returns (rows added, rows removed) from the parquet
+        footers, so callers need no count job.
+
+        Stage `added`; create the journal of staged and removed files
+        with O_CREAT|O_EXCL, as SNAPSHOT manifests are — the commit
+        point; move the staged files in, delete the removed ones, record
+        the SNAPSHOT manifest, delete the journal. Killed before the
+        journal exists, the table is as it was (the staging dir is swept
+        at the next lock); after, each step is idempotent and the next
+        engine start or write lock rolls the journal forward (_recover):
+        never a table without data, never a row's old and new copy both.
+        Staged files without rows are dropped; a commit that changes
+        nothing writes no journal and no version."""
+        import pyarrow.parquet as pq
+
         tdef = self.catalog.load(schema, table)
-        staging = os.path.join(
-            self.catalog.table_path(schema, table), f".staging-{uuid.uuid4().hex}"
+        tpath = self.catalog.table_path(schema, table)
+        data_dir = self.catalog.data_path(schema, table)
+        n_removed = sum(
+            pq.read_metadata(os.path.join(data_dir, f)).num_rows for f in removed
         )
-        self._partitioned_writer(tdef, new_data, "overwrite").parquet(staging)
-        # Move staged part files preserving any <col>=<val>/ partition
-        # subdirectories (an UPDATE that changes a partition-column
-        # value relocates the row's file to the new directory).
-        for root, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(root, staging)
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                dest_dir = (
-                    data_dir if rel == "." else os.path.join(data_dir, rel)
-                )
-                os.makedirs(dest_dir, exist_ok=True)
-                os.rename(os.path.join(root, fn), os.path.join(dest_dir, fn))
+        staging = f".staging-{uuid.uuid4().hex}"
+        staged, n_added = [], 0
+        if added is not None:
+            stage_dir = os.path.join(tpath, staging)
+            # Hive layout: <col>=<val>/ dirs let partition predicates
+            # prune DML file discovery and scans.
+            writer = added.write.mode("overwrite")
+            if tdef.partition_by:
+                writer = writer.partitionBy(*tdef.partition_by)
+            writer.parquet(stage_dir)
+            for f in self._parquet_files(stage_dir):
+                n = pq.read_metadata(os.path.join(stage_dir, f)).num_rows
+                if n:
+                    staged.append(f)
+                    n_added += n
+        if not (staged or removed or new_tdef):
+            shutil.rmtree(os.path.join(tpath, staging), ignore_errors=True)
+            return 0, 0
+        journal = {
+            "staging": staging,
+            "added": staged,
+            "removed": list(removed),
+            "op": getattr(self, "_stmt_kind", None),
+            "tdef": new_tdef.to_json() if new_tdef else None,
+        }
+        fd = os.open(
+            os.path.join(tpath, self._JOURNAL), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+        )
+        try:
+            os.write(fd, json.dumps(journal).encode())
+        finally:
+            os.close(fd)
+        self._apply_journal(schema, table, journal)
+        self._sync_partitions(schema, table, new_tdef or tdef)
+        return n_added, n_removed
+
+    def _apply_journal(self, schema: str, table: str, journal: dict) -> None:
+        """Carry out a committed journal; safe to repeat from any point."""
+        tpath = self.catalog.table_path(schema, table)
+        data_dir = self.catalog.data_path(schema, table)
+        staging = os.path.join(tpath, journal["staging"])
+        # Staged paths keep their <col>=<val>/ partition directories (an
+        # UPDATE of a partition column moves the row's file).
+        for f in journal["added"]:
+            src = os.path.join(staging, f)
+            if os.path.exists(src):
+                dst = os.path.join(data_dir, f)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
+        for f in journal["removed"]:
+            head, name = os.path.split(f)
+            for p in (f, os.path.join(head, f".{name}.crc")):
+                try:
+                    os.remove(os.path.join(data_dir, p))
+                except FileNotFoundError:
+                    pass
+            # A partition directory emptied by the commit goes too.
+            while head:
+                try:
+                    os.rmdir(os.path.join(data_dir, head))
+                except OSError:
+                    break
+                head = os.path.dirname(head)
+        if journal["tdef"]:
+            self.catalog.save(TableDef.from_json(journal["tdef"]))
+        tdef = self.catalog.load(schema, table)
+        if tdef.engine == "snapshot":
+            self._snapshot_commit(schema, table, tdef, op=journal["op"])
         shutil.rmtree(staging, ignore_errors=True)
-        for uri in old_files:
-            path = unquote(urlparse(uri).path)
-            try:
-                os.remove(path)
-            except FileNotFoundError:
-                pass
-        self._sync_partitions(schema, table, tdef)
+        os.remove(os.path.join(tpath, self._JOURNAL))
 
-    def _overwrite_data(self, schema: str, table: str, new_data: DataFrame) -> None:
-        """Copy-on-write swap: write to a staging dir, then replace the
-        data dir. Matches the reference's non-transactional guarantees
-        (its KV mutations aren't atomic across keys either). Used for
-        whole-table rewrites (truncate, ALTER DROP COLUMN, REPLACE,
-        MERGE); UPDATE/DELETE go through the file-pruned
-        _replace_files path instead."""
-        data_dir = self.catalog.data_path(schema, table)
-        tdef = self.catalog.load(schema, table)
-        staging = os.path.join(
-            self.catalog.table_path(schema, table), f".staging-{uuid.uuid4().hex}"
-        )
-        self._partitioned_writer(tdef, new_data, "overwrite").parquet(staging)
-        old = data_dir + f".old-{uuid.uuid4().hex}"
-        os.rename(data_dir, old)
-        os.rename(staging, data_dir)
-        shutil.rmtree(old, ignore_errors=True)
-        self._sync_partitions(schema, table, tdef)
-        self.spark.sql(f"REFRESH TABLE `{schema}`.`{table}`")
+    def _recover(self, schema: str, table: str) -> bool:
+        """Roll a leftover journal forward and sweep staging dirs left by
+        killed writes; True when a journal was applied. Runs only under
+        the table's write lock, so nothing found here is in flight."""
+        tpath = self.catalog.table_path(schema, table)
+        path = os.path.join(tpath, self._JOURNAL)
+        journal = None
+        try:
+            with open(path) as f:
+                journal = json.load(f)
+        except FileNotFoundError:
+            pass
+        except ValueError:
+            # Cut short while being written: no file had moved yet.
+            os.remove(path)
+        if journal is not None:
+            self._apply_journal(schema, table, journal)
+        for name in os.listdir(tpath):
+            if name.startswith(".staging-"):
+                shutil.rmtree(os.path.join(tpath, name), ignore_errors=True)
+        return journal is not None
 
     # ------------------------------------------------------------------
     # snapshot versioning (ENGINE=SNAPSHOT) — a Delta-style commit log
@@ -2351,15 +2426,7 @@ class Engine:
         data_dir = self.catalog.data_path(schema, table)
         pool = self._snap_pool_dir(schema, table)
         os.makedirs(pool, exist_ok=True)
-        rels = []
-        if os.path.isdir(data_dir):
-            for root, _dirs, fns in os.walk(data_dir):
-                for fn in fns:
-                    if fn.endswith(".parquet"):
-                        rels.append(
-                            os.path.relpath(os.path.join(root, fn), data_dir)
-                        )
-        rels.sort()
+        rels = self._parquet_files(data_dir)
         versions = self._snap_versions(schema, table)
         latest = versions[-1] if versions else None
         if latest is not None:
@@ -2391,32 +2458,13 @@ class Engine:
             os.close(fd)
             return
 
-    def _snap_read_files(
-        self, schema: str, table: str, tdef: TableDef, rels: list[str]
-    ) -> DataFrame:
-        """Read the given pool-relative parquet paths with the table's
-        schema (hidden rowid included). Partition-column values are
-        recovered from the preserved <col>=<val>/ relative paths via
-        basePath."""
-        fields = [f"`{ROWID}` string"] + [
-            f"`{c.name}` {c.spark_type}" for c in tdef.columns
-        ]
-        reader_schema = ", ".join(fields)
-        if not rels:
-            return self.spark.createDataFrame([], reader_schema)
-        pool = self._snap_pool_dir(schema, table)
-        reader = self.spark.read.schema(reader_schema)
-        if tdef.partition_by:
-            reader = reader.option("basePath", pool)
-        return reader.parquet(*[os.path.join(pool, r) for r in rels])
-
     def _snap_read(self, schema: str, table: str, v: int) -> DataFrame:
         """Snapshot-consistent read of version v from the immutable
         pool (includes the hidden rowid; callers drop it for user
         surfaces)."""
         tdef = self._require_snapshot(schema, table)
         man = self._snap_manifest(schema, table, v)
-        return self._snap_read_files(schema, table, tdef, man["files"])
+        return self._read_files(tdef, man["files"], self._snap_pool_dir(schema, table))
 
     def _snap_changes(
         self, schema: str, table: str, v_from: int, v_to: int
@@ -2498,8 +2546,9 @@ class Engine:
             added = sorted(set(man_cur["files"]) - set(man_prev["files"]))
             if not removed and not added:
                 continue
-            old = self._snap_read_files(schema, table, tdef, removed).alias("o")
-            new = self._snap_read_files(schema, table, tdef, added).alias("n")
+            pool = self._snap_pool_dir(schema, table)
+            old = self._read_files(tdef, removed, pool).alias("o")
+            new = self._read_files(tdef, added, pool).alias("n")
             j = old.join(new, F.col(f"o.{ROWID}") == F.col(f"n.{ROWID}"), "full")
             same = F.lit(True)
             for c in cols:
@@ -2540,7 +2589,6 @@ class Engine:
             raise SparrowError(1064, f"syntax error in SHOW VERSIONS: {stmt[:80]}")
         schema, table = self._resolve_table_name(m.group(1))
         self._require_snapshot(schema, table)
-        import datetime
 
         pool = self._snap_pool_dir(schema, table)
         rows = []
@@ -2586,8 +2634,7 @@ class Engine:
         self._require_snapshot(schema, table)
         snap = self._snap_read(schema, table, int(m.group(2)))
         self._stmt_kind = "restore"
-        n = snap.count()
-        self._overwrite_data(schema, table, snap)
+        n, _ = self._commit(schema, table, self._all_files(schema, table), snap)
         return Result("ok", affected_rows=n)
 
     def _vacuum(self, stmt: str) -> Result:
@@ -2743,7 +2790,6 @@ class Engine:
         interpreted as UTC, not the session timezone — manifest
         timestamps are epoch seconds and this engine pins its session
         timezone to UTC throughout."""
-        import datetime
 
         def sub(m: "re.Match[str]") -> str:
             schema, table = self._resolve_table_name(m.group(1))
@@ -2843,10 +2889,6 @@ class Engine:
             self.spark.sql(
                 f"MSCK REPAIR TABLE `{tdef.schema}`.`{tdef.name}`"
             )
-
-    def _recreate_spark_table(self, tdef: TableDef) -> None:
-        self.spark.sql(f"DROP TABLE IF EXISTS `{tdef.schema}`.`{tdef.name}`")
-        self._register_spark_table(tdef)
 
     # ------------------------------------------------------------------
     # SHOW family + information_schema (S14-S20)

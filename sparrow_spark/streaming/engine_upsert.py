@@ -18,8 +18,10 @@ finishes: the oracle hash proves the ledger absorbed the replay.
 
 Scale: per batch the corpus contributes one user-keyed aggregate of
 THAT batch only; the MERGE is the engine's set-at-a-time copy-on-write
-(anti-join split + inner-join pairing) against a profiles table
-bounded by user cardinality, never by event volume.
+(an outer join updates the matched users, an anti-join finds the new
+ones). It rewrites only the profiles files holding a matched user and
+appends the new users, against a profiles table bounded by user
+cardinality, never by event volume.
 """
 
 from __future__ import annotations

@@ -599,44 +599,157 @@ def _data_files(engine, db, table):
     return {f for f in os.listdir(d) if f.endswith(".parquet")}
 
 
-def test_update_rewrites_only_touched_files(engine):
-    # File-level copy-on-write: separate INSERTs append separate parquet
-    # files; an UPDATE matching rows in one file must leave the other
-    # file untouched on disk (same file name still present).
-    boot(engine)
-    engine.sql("CREATE TABLE cow (id INT, v INT, PRIMARY KEY(id))")
-    engine.sql("INSERT INTO cow VALUES (1, 10), (2, 20)")
-    engine.sql("INSERT INTO cow VALUES (3, 30), (4, 40)")
-    before = _data_files(engine, "test_db", "cow")
-    assert len(before) >= 2
-    r = engine.sql("UPDATE cow SET v = 99 WHERE id = 3")
-    assert r.affected_rows == 1
-    after = _data_files(engine, "test_db", "cow")
-    # at least one original file survives verbatim; at least one was
-    # replaced by a fresh part file
-    assert before & after, "untouched file should not be rewritten"
-    assert after - before, "touched file should be replaced"
-    rows = engine.sql("SELECT id, v FROM cow ORDER BY id").rows()
-    assert [(r.id, r.v) for r in rows] == [(1, 10), (2, 20), (3, 99), (4, 40)]
+# Keyed writes, as (statement that hits id 3, its affected_rows, a
+# statement that matches no stored row, its affected_rows, rows the hit
+# changes: id -> (g, v), None when deleted). The table holds ids 1-4, two
+# rows per INSERT, so each INSERT leaves files of its own and id 3 shares
+# a file with id 4 at most.
+_COW_ROWS = {1: ("a", 10), 2: ("b", 20), 3: ("a", 30), 4: ("b", 40)}
+_ODKU = "ON DUPLICATE KEY UPDATE v = v + VALUES(v)"
+_MERGE = (
+    "MERGE INTO cow t USING (SELECT {} AS id, 99 AS v) s ON t.id = s.id "
+    "WHEN MATCHED THEN UPDATE SET v = s.v "
+    "WHEN NOT MATCHED THEN INSERT (id, g, v) VALUES (s.id, 'b', s.v)"
+)
+KEYED_WRITES = {
+    "update": (
+        "UPDATE cow SET v = 99 WHERE id = 3", 1,
+        "UPDATE cow SET v = 99 WHERE id = 9", 0,
+        {3: ("a", 99)},
+    ),
+    "delete": (
+        "DELETE FROM cow WHERE id = 3", 1,
+        "DELETE FROM cow WHERE id = 9", 0,
+        {3: None},
+    ),
+    "replace": (
+        "REPLACE INTO cow VALUES (3, 'a', 99)", 1,
+        "REPLACE INTO cow VALUES (9, 'b', 90)", 1,
+        {3: ("a", 99)},
+    ),
+    "odku": (
+        f"INSERT INTO cow VALUES (3, 'a', 1), (9, 'b', 90) {_ODKU}", 3,
+        f"INSERT INTO cow VALUES (8, 'b', 80) {_ODKU}", 1,
+        {3: ("a", 31), 9: ("b", 90)},
+    ),
+    "odku_fold": (
+        f"INSERT INTO cow VALUES (3, 'a', 1), (3, 'a', 2) {_ODKU}", 4,
+        f"INSERT INTO cow VALUES (8, 'b', 1), (8, 'b', 2) {_ODKU}", 3,
+        {3: ("a", 33)},
+    ),
+    "merge": (_MERGE.format(3), 1, _MERGE.format(9), 1, {3: ("a", 99)}),
+}
 
 
-def test_delete_rewrites_only_touched_files(engine):
+def _file_ids(engine, db, table) -> dict:
+    """Data-dir-relative parquet path -> the ids it holds."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    d = engine.catalog.data_path(db, table)
+    out = {}
+    for root, _dirs, fns in os.walk(d):
+        for fn in fns:
+            if fn.endswith(".parquet"):
+                path = os.path.join(root, fn)
+                ids = pq.read_table(path, columns=["id"]).column("id").to_pylist()
+                out[os.path.relpath(path, d)] = set(ids)
+    return out
+
+
+@pytest.mark.parametrize("layout", ["plain", "partitioned", "snapshot"])
+@pytest.mark.parametrize("kind", sorted(KEYED_WRITES))
+def test_keyed_write_rewrites_only_touched_files(engine, kind, layout):
+    # File-level copy-on-write: a keyed write replaces the files holding
+    # the rows it changes and leaves every other file on disk as it was.
+    hit, hit_affected, miss, miss_affected, changes = KEYED_WRITES[kind]
     boot(engine)
-    engine.sql("CREATE TABLE cowd (id INT, v INT, PRIMARY KEY(id))")
-    engine.sql("INSERT INTO cowd VALUES (1, 10), (2, 20)")
-    engine.sql("INSERT INTO cowd VALUES (3, 30), (4, 40)")
-    before = _data_files(engine, "test_db", "cowd")
-    r = engine.sql("DELETE FROM cowd WHERE id = 2")
-    assert r.affected_rows == 1
-    after = _data_files(engine, "test_db", "cowd")
-    assert before & after
-    rows = engine.sql("SELECT id FROM cowd ORDER BY id").rows()
-    assert [r.id for r in rows] == [1, 3, 4]
-    # no-match DELETE touches nothing at all
-    mid = _data_files(engine, "test_db", "cowd")
-    r = engine.sql("DELETE FROM cowd WHERE id = 999")
-    assert r.affected_rows == 0
-    assert _data_files(engine, "test_db", "cowd") == mid
+    suffix = {
+        "plain": "",
+        "partitioned": " PARTITIONED BY (g)",
+        "snapshot": " ENGINE=SNAPSHOT",
+    }[layout]
+    engine.sql(f"CREATE TABLE cow (id INT, g CHAR, v INT, PRIMARY KEY(id)){suffix}")
+    engine.sql("INSERT INTO cow VALUES (1, 'a', 10), (2, 'b', 20)")
+    engine.sql("INSERT INTO cow VALUES (3, 'a', 30), (4, 'b', 40)")
+    n_versions = len(engine._snap_versions("test_db", "cow"))
+    before = _file_ids(engine, "test_db", "cow")
+    holding = {f for f, ids in before.items() if 3 in ids}
+    assert len(before) >= 2 and holding
+
+    assert engine.sql(hit).affected_rows == hit_affected
+    after = _file_ids(engine, "test_db", "cow")
+    assert not holding & after.keys(), "touched file should be replaced"
+    assert before.keys() - holding <= after.keys(), "untouched file should survive"
+    want = {k: v for k, v in {**_COW_ROWS, **changes}.items() if v is not None}
+    rows = engine.sql("SELECT id, g, v FROM cow").rows()
+    assert {r.id: (r.g, r.v) for r in rows} == want
+    if layout == "partitioned":
+        for f, ids in after.items():
+            assert {f"g={want[i][0]}" for i in ids} == {f.split("/")[0]}, f
+    if layout == "snapshot":
+        assert len(engine._snap_versions("test_db", "cow")) == n_versions + 1
+
+    # A keyed write that matches no stored row removes no file (and,
+    # when it inserts nothing either, adds none).
+    assert engine.sql(miss).affected_rows == miss_affected
+    now = _file_ids(engine, "test_db", "cow").keys()
+    assert after.keys() <= now
+    if kind in ("update", "delete"):
+        assert now == after.keys()
+
+
+def test_values_batch_key_checks_start_at_most_one_job(engine):
+    # A literal VALUES batch is a local relation: collecting it starts
+    # no Spark job, in-batch duplicates are found in Python, and stored
+    # keys take one IN-list scan.
+    import uuid
+
+    boot(engine)
+    engine.sql("CREATE TABLE kc (id INT, v INT, PRIMARY KEY(id))")
+    engine.sql("INSERT INTO kc VALUES (1, 10), (2, 20)")
+    sc = engine.spark.sparkContext
+
+    def jobs(stmt):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, stmt)
+        try:
+            with pytest.raises(SparrowError) as e:
+                engine.sql(stmt)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert e.value.code == 1062
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("INSERT INTO kc VALUES (5, 1), (5, 2)") == 0
+    assert jobs("REPLACE INTO kc VALUES (5, 1), (5, 2)") == 0
+    assert jobs("INSERT INTO kc VALUES (3, 1), (2, 1)") == 1
+
+
+def test_values_key_probe_matches_every_key_type(engine):
+    # The probe renders a batch's keys as SQL literals: each type must
+    # compare equal to the stored value, or INSERT would miss the
+    # duplicate and REPLACE / ODKU would keep a stale row.
+    boot(engine)
+    engine.sql(
+        "CREATE TABLE kt (s CHAR, d DATE, ts TIMESTAMP, x DOUBLE, b BOOLEAN, "
+        "bin BINARY, v INT, PRIMARY KEY (s, d, ts, x, b, bin))"
+    )
+    key = (
+        "'it\\'s \\\\ a', DATE'2024-02-29', TIMESTAMP'2024-03-01 12:34:56.789', "
+        "0.1, true, X'00FF'"
+    )
+    engine.sql(f"INSERT INTO kt VALUES ({key}, 1)")
+    with pytest.raises(SparrowError) as e:
+        engine.sql(f"INSERT INTO kt VALUES ({key}, 2)")
+    assert e.value.code == 1062
+    assert engine.sql(f"REPLACE INTO kt VALUES ({key}, 3)").affected_rows == 1
+    r = engine.sql(f"INSERT INTO kt VALUES ({key}, 5) ON DUPLICATE KEY UPDATE v = v + VALUES(v)")
+    assert r.affected_rows == 2
+    rows = engine.sql("SELECT s, x, b, v FROM kt").rows()
+    assert [(r.s, r.x, r.b, r.v) for r in rows] == [("it's \\ a", 0.1, True, 8)]
 
 
 def test_optimize_table_compacts_files(engine):
@@ -810,7 +923,7 @@ def test_insert_on_duplicate_key_update(engine):
 
     from sparrow_spark.engine import SparrowError
 
-    # intra-batch duplicates fold sequentially (MySQL semantics, r11):
+    # intra-batch duplicates fold sequentially (MySQL semantics):
     # 7 inserts as (7,1,'x'), then the second occurrence applies the
     # UPDATE clause -> hits = 2. affected_rows = 1 insert + 2 update.
     r = engine.sql(
@@ -1143,7 +1256,7 @@ def test_dunder_column_names_are_reserved(engine):
 
 
 def test_rename_does_not_carry_the_write_lock(engine):
-    """Regression (r13): the table-directory move of a RENAME carried
+    """Regression: the table-directory move of a RENAME carried
     the source's .write.lock file to the destination — our own lock
     record, which the post-rename release could no longer find (it
     removes the OLD path), wedging every later DML on the new name
