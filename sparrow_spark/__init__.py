@@ -11,8 +11,10 @@ Spark-first:
   SELECT execution to DataFusion (reference: src/execute_impl/select.rs:41-81).
 - The engine's own code is the part the reference also hand-writes:
   session/catalog layer, MySQL-dialect front-end shim (SHOW/USE/SET/
-  @@vars/dual/database()), DML semantics (rowid, unique-key enforcement,
-  copy-on-write UPDATE/DELETE) — see sparrow_spark.engine.
+  @@vars/dual, and database() expanded to the session's schema as a
+  literal rather than registered as a UDF), DML semantics (rowid,
+  unique-key enforcement, copy-on-write UPDATE/DELETE) — see
+  sparrow_spark.engine.
 - Beyond the reference's surface: large-scale training-data pipeline
   operators (dedup, similarity search, text analysis, multimodal
   plumbing) and Structured Streaming ingestion, all designed for

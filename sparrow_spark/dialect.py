@@ -117,39 +117,57 @@ def first_words(sql: str, n: int = 3) -> list[str]:
     return [t.upper() for t in toks[:n]]
 
 
+# @@[session.|global.]name, @name and DATABASE(): the session state a
+# statement may read, matched in one pass so that the text of a value
+# already substituted is never expanded again.
+_SESSION_REF = re.compile(
+    r"@@(?:session\.|global\.)?([A-Za-z_][A-Za-z0-9_]*)"
+    r"|@([A-Za-z_][A-Za-z0-9_]*)"
+    r"|(?<![\w.])database\s*\(\s*\)",
+    re.I,
+)
+
+
 def substitute_variables(
-    sql: str, system_vars: dict[str, str], user_vars: dict[str, str]
+    sql: str,
+    system_vars: dict[str, str],
+    user_vars: dict[str, str],
+    current_schema: str | None,
 ) -> str:
-    """Replace @@[session.|global.]name and @name with literals, the
-    way the reference expands them at planning time. Quoted strings are
-    left untouched."""
+    """Replace @@[session.|global.]name, @name and DATABASE() with
+    literals, the way the reference expands them at planning time.
+    DATABASE() (the reference's one custom UDF, src/core/execution.rs:
+    135-156) becomes the session's schema as a string literal, or a
+    string-typed NULL when none is selected, so switching sessions
+    registers nothing with Spark. Quoted strings are left untouched."""
+    if not _SESSION_REF.search(sql):
+        return sql
 
-    def repl_sys(m: re.Match) -> str:
-        name = m.group(2).lower()
-        val = system_vars.get(name)
+    def repl(m: re.Match) -> str:
+        sys_name, user_name = m.groups()
+        if sys_name:
+            val = system_vars.get(sys_name.lower())
+        elif user_name:
+            val = user_vars.get(user_name.lower())
+        elif current_schema is None:
+            return "CAST(NULL AS STRING)"
+        else:
+            return _quote(current_schema)
         return _render(val) if val is not None else "NULL"
 
-    def repl_user(m: re.Match) -> str:
-        name = m.group(1).lower()
-        val = user_vars.get(name)
-        return _render(val) if val is not None else "NULL"
-
-    out: list[str] = []
-    for piece, quoted in _split_quotes(sql):
-        if quoted:
-            out.append(piece)
-            continue
-        piece = re.sub(
-            r"@@(session\.|global\.)?([A-Za-z_][A-Za-z0-9_]*)", repl_sys, piece
-        )
-        piece = re.sub(r"@([A-Za-z_][A-Za-z0-9_]*)", repl_user, piece)
-        out.append(piece)
-    return "".join(out)
+    return "".join(
+        piece if quoted else _SESSION_REF.sub(repl, piece)
+        for piece, quoted in _split_quotes(sql)
+    )
 
 
 def _render(val: str) -> str:
     if re.match(r"^-?\d+(\.\d+)?$", val):
         return val
+    return _quote(val)
+
+
+def _quote(val: str) -> str:
     # Double backslashes BEFORE quotes: Spark SQL treats \ as an escape
     # by default, so a value ending in '\' would otherwise escape the
     # closing quote (malformed statement / injection vector).

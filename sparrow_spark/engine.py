@@ -254,13 +254,10 @@ class Engine:
         # commit protocol itself never reads the clock for ordering
         # (version numbers do that), so this changes no semantics.
         self.snapshot_clock = None
-        # database() UDF, mirroring the reference's only custom UDF
-        # (src/core/execution.rs:135-156). The closure is pickled to the
-        # workers at registration time, so it must capture a plain value
-        # (not the engine — it holds the SparkContext) and be
-        # re-registered whenever USE (or session switch) changes the
-        # current schema.
-        self._register_database_udf()
+        # DATABASE(), the reference's only custom UDF (src/core/
+        # execution.rs:135-156), registers no function: _expand turns it
+        # into the active session's schema as a literal, so a session
+        # switch only has to move Spark's current database.
         # `dual` as a real 1-row relation (reference: 1-row MemTable,
         # src/datafusion_impl/catalog/information_schema.rs:117-133).
         spark.sql("SELECT 1 AS dummy").createOrReplaceTempView("dual")
@@ -297,8 +294,7 @@ class Engine:
     @contextmanager
     def activate(self, session: Session):
         """Run statements under `session`'s state; restores the previous
-        session (and the Spark-side current database + database() UDF)
-        afterwards."""
+        session (and the Spark-side current database) afterwards."""
         prev = self._active
         self._active = session
         if prev is not session:
@@ -311,10 +307,11 @@ class Engine:
                 self._sync_spark_session_state()
 
     def _sync_spark_session_state(self) -> None:
-        self._register_database_udf()
-        db = self._active.db
+        db = self._active.db or "default"
+        if self.spark.catalog.currentDatabase() == db:
+            return
         try:
-            self.spark.catalog.setCurrentDatabase(db if db else "default")
+            self.spark.catalog.setCurrentDatabase(db)
         except Exception:  # schema dropped since this session used it
             self.spark.catalog.setCurrentDatabase("default")
 
@@ -346,11 +343,13 @@ class Engine:
     @current_schema.setter
     def current_schema(self, value: str | None) -> None:
         self._active.db = value
-        self._register_database_udf()
 
-    def _register_database_udf(self) -> None:
-        db_val = self._active.db
-        self.spark.udf.register("database", lambda: db_val)
+    def _expand(self, sql: str) -> str:
+        """`sql` with the active session's @@vars, @vars and DATABASE()
+        replaced by literals."""
+        return substitute_variables(
+            sql, self.system_vars, self.user_vars, self.current_schema
+        )
 
     # ------------------------------------------------------------------
     # public API
@@ -496,7 +495,7 @@ class Engine:
     # queries
     # ------------------------------------------------------------------
     def _view_ddl(self, stmt: str) -> Result:
-        sql = substitute_variables(stmt, self.system_vars, self.user_vars)
+        sql = self._expand(stmt)
         sql = strip_dual(sql)
         sql = self._rewrite_information_schema(sql)
         try:
@@ -506,7 +505,7 @@ class Engine:
         return Result("ok")
 
     def _query(self, stmt: str) -> Result:
-        sql = substitute_variables(stmt, self.system_vars, self.user_vars)
+        sql = self._expand(stmt)
         sql = strip_dual(sql)
         sql = self._rewrite_information_schema(sql)
         if re.search(r"VERSION\s+AS\s+OF", sql, re.I):
@@ -528,7 +527,7 @@ class Engine:
         m = re.match(r"EXPLAIN\s+(ANALYZE\s+|VERBOSE\s+)?(.*)", stmt, re.I | re.S)
         mode = (m.group(1) or "").strip().upper()
         inner = m.group(2)
-        inner = substitute_variables(inner, self.system_vars, self.user_vars)
+        inner = self._expand(inner)
         inner = self._rewrite_information_schema(strip_dual(inner))
         if mode == "ANALYZE":
             return self._explain_analyze(inner)
@@ -1211,8 +1210,8 @@ class Engine:
             if not tdef.column(cname):
                 raise SparrowError(1054, f"Unknown column '{cname}' in 'field list'")
             expr_sql = re.sub(
-                r"VALUES\s*\(\s*`?(\w+)`?\s*\)", r"`__new_\1`", am.group(2),
-                flags=re.I,
+                r"VALUES\s*\(\s*`?(\w+)`?\s*\)", r"`__new_\1`",
+                self._expand(am.group(2)), flags=re.I,
             )
             assigns[cname] = expr_sql
         rows = new_rows.collect() if from_values else None
@@ -1436,7 +1435,7 @@ class Engine:
 
         src = self._query(src_query).df.alias(s_alias)
         full = self._read_physical(schema, table, tdef)
-        cond = F.expr(substitute_variables(on_cond, self.system_vars, self.user_vars))
+        cond = F.expr(self._expand(on_cond))
         tcols = [c.name for c in tdef.columns]
         assigns = {}
         if upd_m:
@@ -1445,7 +1444,7 @@ class Engine:
                 col = check_ident(col.strip().split(".")[-1])
                 if not tdef.column(col):
                     raise SparrowError(1054, f"Unknown column '{col}' in MERGE SET")
-                assigns[col] = expr.strip()
+                assigns[col] = self._expand(expr.strip())
 
         affected, touched = 0, []
         if upd_m or del_m:
@@ -1505,7 +1504,7 @@ class Engine:
         if has_insert:
             if ins_spec is not None:
                 ins_cols = [check_ident(c) for c in split_top_level(ins_spec[0])]
-                ins_exprs = split_top_level(ins_spec[1])
+                ins_exprs = [self._expand(e) for e in split_top_level(ins_spec[1])]
             else:  # INSERT *
                 ins_cols, ins_exprs = tcols, [f"{s_alias}.{c}" for c in tcols]
             # Without a WHEN MATCHED clause no files were looked up, so
@@ -1644,9 +1643,9 @@ class Engine:
             col = check_ident(col)
             if not tdef.column(col):
                 raise SparrowError(1054, f"Unknown column '{col}' in 'field list'")
-            assignments.append((col, expr.strip()))
+            assignments.append((col, self._expand(expr.strip())))
 
-        pred = F.expr(substitute_variables(where, self.system_vars, self.user_vars)) if where else F.lit(True)
+        pred = F.expr(self._expand(where)) if where else F.lit(True)
         # File-level copy-on-write (Delta/Iceberg COW granularity): one
         # pass finds which parquet files contain matched rows AND the
         # matched count; only those files are rewritten — an UPDATE
@@ -1679,7 +1678,7 @@ class Engine:
             # Unconditional DELETE = truncate; the footers give the count.
             _, total = self._commit(schema, table, self._all_files(schema, table), None)
             return Result("ok", affected_rows=total)
-        pred = F.expr(substitute_variables(where, self.system_vars, self.user_vars))
+        pred = F.expr(self._expand(where))
         # File-level copy-on-write, like UPDATE: rewrite only the files
         # that contain rows to delete (NULL predicate keeps the row,
         # matching SQL WHERE semantics).

@@ -45,6 +45,13 @@ CLIENT_PLUGIN_AUTH = 0x00080000
 CLIENT_CONNECT_WITH_DB = 0x0008
 SERVER_STATUS_AUTOCOMMIT = 0x0002
 
+MAX_PACKET = 0xFFFFFF  # a payload this long or longer continues in the next packet
+# Responses are framed into a per-connection buffer, sent when it passes
+# this size and before the next command is read: a resultset of small
+# packets leaves in one send (MySQL's net_buffer scheme, at the default
+# net_buffer_length).
+FLUSH_AT = 64 * 1024
+
 _SPARK_TO_MYSQL = {
     "tinyint": T_TINY,
     "smallint": T_SHORT,
@@ -134,36 +141,58 @@ class _Conn:
         # streamed bytes; consumed by the next execute, cleared by
         # COM_STMT_RESET/CLOSE (MySQL long-data lifecycle).
         self._long_data: dict[tuple[int, int], bytearray] = {}
+        self._out = bytearray()  # framed packets not yet sent
 
     # -- packet framing (3-byte length + 1-byte sequence id) -----------
-    def _recv_exact(self, n: int) -> bytes | None:
-        data = b""
-        while len(data) < n:
-            chunk = self.sock.recv(n - len(data))
-            if not chunk:
+    def _recv_exact(self, n: int) -> bytearray | None:
+        buf = bytearray(n)
+        view = memoryview(buf)
+        got = 0
+        while got < n:
+            k = self.sock.recv_into(view[got:])
+            if not k:
                 return None
-            data += chunk
-        return data
+            got += k
+        return buf
 
     def read_packet(self) -> bytes | None:
-        head = self._recv_exact(4)
-        if head is None:
-            return None
-        length = int.from_bytes(head[:3], "little")
-        self.seq = head[3] + 1
-        payload = self._recv_exact(length) if length else b""
-        return payload
+        """One payload: packets of exactly MAX_PACKET bytes mean more
+        follow, up to a shorter (possibly empty) one. Pending responses
+        are sent first, since the client waits for them."""
+        self.flush()
+        parts = []
+        while True:
+            head = self._recv_exact(4)
+            if head is None:
+                return None
+            length = int.from_bytes(head[:3], "little")
+            self.seq = head[3] + 1
+            if length:
+                part = self._recv_exact(length)
+                if part is None:
+                    return None
+                parts.append(part)
+            if length < MAX_PACKET:
+                return b"".join(parts)
 
     def write_packet(self, payload: bytes) -> None:
-        # Large payloads split at 0xffffff (max packet length).
+        pos = 0
         while True:
-            chunk, payload = payload[:0xFFFFFF], payload[0xFFFFFF:]
-            self.sock.sendall(
-                len(chunk).to_bytes(3, "little") + bytes([self.seq & 0xFF]) + chunk
-            )
+            n = min(len(payload) - pos, MAX_PACKET)
+            self._out += n.to_bytes(3, "little")
+            self._out.append(self.seq & 0xFF)
+            self._out += payload[pos : pos + n]
             self.seq += 1
-            if len(chunk) < 0xFFFFFF:
+            pos += n
+            if n < MAX_PACKET:
                 break
+        if len(self._out) >= FLUSH_AT:
+            self.flush()
+
+    def flush(self) -> None:
+        if self._out:
+            out, self._out = self._out, bytearray()
+            self.sock.sendall(out)
 
     # -- protocol messages ---------------------------------------------
     def send_ok(self, affected: int = 0, info: str = "") -> None:
@@ -570,6 +599,10 @@ class SparrowServer:
 
         class Handler(socketserver.BaseRequestHandler):
             def handle(self) -> None:
+                # Each flush is a whole response or FLUSH_AT of one; with
+                # Nagle on, a flush would wait for the client's delayed
+                # ACK of the previous one (~40 ms on Linux).
+                self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
                 conn = _Conn(self.request, outer.engine.new_session(), outer.lock)
                 try:
                     conn.run()

@@ -166,10 +166,48 @@ def test_variables_and_dual(engine):
     assert {r.Variable_name for r in rows} == {"version", "version_comment"}
 
 
-def test_database_function(engine):
-    boot(engine, "mydb")
-    rows = engine.sql("SELECT database() AS db").rows()
-    assert rows[0]["db"] == "mydb"
+_KV = "CREATE TABLE kv (id INT, s CHAR, PRIMARY KEY(id))"
+
+
+@pytest.mark.parametrize(
+    "schema, setup, query, expected",
+    [
+        ("mydb", [], "SELECT DATABASE() AS db", "mydb"),
+        ("mydb", [], "SELECT database ( ) AS db", "mydb"),
+        ("mydb", [], "SELECT 'database()' AS db", "database()"),
+        # the F.expr paths: UPDATE ... WHERE and MERGE ... ON
+        (
+            "mydb",
+            [_KV, "INSERT INTO kv VALUES (1, 'a')",
+             "UPDATE kv SET s = 'hit' WHERE database() = 'mydb'"],
+            "SELECT s AS db FROM kv",
+            "hit",
+        ),
+        (
+            "mydb",
+            [_KV, "INSERT INTO kv VALUES (1, 'a')",
+             "MERGE INTO kv t USING (SELECT 1 AS id) s "
+             "ON t.id = s.id AND database() = 'mydb' "
+             "WHEN MATCHED THEN UPDATE SET s = database()"],
+            "SELECT s AS db FROM kv",
+            "mydb",
+        ),
+        (None, [], "SELECT database() AS db", None),
+    ],
+    ids=["upper", "spaced", "quoted", "update_where", "merge_on", "no_schema"],
+)
+def test_database_function(engine, schema, setup, query, expected):
+    # DATABASE() is expanded to a literal, as @@vars and @vars are, so
+    # its type stays the string the reference's UDF returned and no
+    # function is registered with Spark.
+    if schema:
+        boot(engine, schema)
+    for stmt in setup:
+        engine.sql(stmt)
+    df = engine.sql(query).df
+    assert df.collect()[0]["db"] == expected
+    assert df.schema["db"].dataType.simpleString() == "string"
+    assert not engine.spark.catalog.functionExists("database")
 
 
 def test_explain_as_resultset(engine):

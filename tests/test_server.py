@@ -8,10 +8,19 @@ from __future__ import annotations
 
 import socket
 import struct
+import threading
 
 import pytest
 
-from sparrow_spark.server import SparrowServer, _lenenc_int, _lenenc_str, _read_lenenc
+from sparrow_spark.server import (
+    FLUSH_AT,
+    MAX_PACKET,
+    SparrowServer,
+    _Conn,
+    _lenenc_int,
+    _lenenc_str,
+    _read_lenenc,
+)
 
 
 class MiniClient:
@@ -489,3 +498,103 @@ def test_wire_change_user_switches_schema(server):
     _, rows = c.query("SELECT database() AS d, @stale AS s")
     assert rows == [["cu_new", None]]  # schema switched, vars cleared
     c.quit()
+
+
+class _SendLog:
+    """Socket proxy that records every sendall."""
+
+    def __init__(self, sock):
+        self._sock = sock
+        self.sends: list[bytes] = []
+
+    def sendall(self, data) -> None:
+        self.sends.append(bytes(data))
+        if self._sock is not None:
+            self._sock.sendall(data)
+
+    def __getattr__(self, name):
+        return getattr(self._sock, name)
+
+
+@pytest.fixture()
+def server_conns(monkeypatch):
+    """Server-side _Conn of each connection accepted from now on, its
+    socket wrapped in a _SendLog."""
+    conns = []
+    run = _Conn.run
+
+    def logged_run(self):
+        self.sock = _SendLog(self.sock)
+        conns.append(self)
+        run(self)
+
+    monkeypatch.setattr(_Conn, "run", logged_run)
+    return conns
+
+
+def test_wire_each_response_is_one_send(server, server_conns):
+    # Responses are framed into a buffer and sent whole: one send per
+    # OK, ERR, PREPARE response and small resultset, FLUSH_AT pieces for
+    # a large one, over a TCP_NODELAY socket.
+    c = MiniClient(server.host, server.port)
+    log = server_conns[0].sock
+    assert log.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    c.query("CREATE DATABASE IF NOT EXISTS onesend")
+    c.init_db("onesend")
+    c.query("CREATE TABLE kv (id INT, s CHAR, PRIMARY KEY(id))")
+
+    def sent(call):
+        log.sends.clear()
+        return call(), len(log.sends)
+
+    assert sent(lambda: c.query("INSERT INTO kv VALUES (1, 'a')")) == (("ok", 1), 1)
+    err, n = sent(lambda: c.query("INSERT INTO kv VALUES (1, 'b')"))
+    assert err[:2] == ("err", 1062) and n == 1
+    (sid, n_params), n = sent(lambda: c.prepare("SELECT id, s FROM kv WHERE id = ?"))
+    assert n_params == 1 and n == 1
+    assert sent(lambda: c.execute(sid, [1])) == ((["id", "s"], [[1, "a"]]), 1)
+    (cols, rows), n = sent(
+        lambda: c.query("SELECT id, repeat('x', 1000) AS pad FROM range(200)")
+    )
+    assert cols == ["id", "pad"]
+    assert rows == [[str(i), "x" * 1000] for i in range(200)]
+    assert n > 1 and max(len(b) for b in log.sends) < FLUSH_AT + 1100
+    c.quit()
+
+
+def _frame(seq: int, payload: bytes) -> bytes:
+    return len(payload).to_bytes(3, "little") + bytes([seq]) + payload
+
+
+@pytest.mark.parametrize("size", [MAX_PACKET + 10, MAX_PACKET], ids=["over", "exact"])
+def test_codec_splits_and_reassembles_long_payloads(size):
+    # A payload of MAX_PACKET bytes or more travels as MAX_PACKET-long
+    # packets ended by a shorter (possibly empty) one; the reader must
+    # reassemble it and leave the next command (a COM_PING) intact.
+    payload = bytes(range(256)) * (size // 256) + b"\x07" * (size % 256)
+    wire = (
+        _frame(0, payload[:MAX_PACKET])
+        + _frame(1, payload[MAX_PACKET:])
+        + _frame(0, b"\x0e")
+    )
+
+    writer = _Conn(_SendLog(None), None, None)
+    writer.write_packet(payload)
+    writer.seq = 0
+    writer.write_packet(b"\x0e")
+    writer.flush()
+    assert b"".join(writer.sock.sends) == wire
+
+    a, b = socket.socketpair()
+    a.settimeout(30)
+    sender = threading.Thread(target=b.sendall, args=(wire,))
+    sender.start()
+    try:
+        reader = _Conn(a, None, None)
+        assert reader.read_packet() == payload
+        assert reader.seq == 2
+        assert reader.read_packet() == b"\x0e"
+    finally:
+        sender.join(30)
+        a.close()
+        b.close()
